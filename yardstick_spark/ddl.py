@@ -19,15 +19,14 @@ from .catalog import MeasureView, ViewMeasure
 from .functions.compat import normalize_expr_to_spark
 from .parser import parse_select, has_window_over
 from .sqlutil import (
-    find_first_top_level_keyword,
-    find_top_level_keyword,
-    iter_identifiers,
-    next_nonspace,
+    QIDENT,
+    SQL_KEYWORDS,
+    WORD,
+    Tokens,
     normalize_dim_key,
     split_top_level,
+    tokenize,
     unquote_ident,
-    is_word_boundary,
-    skip_code_unit,
 )
 
 NON_DECOMPOSABLE_AGGREGATES = (
@@ -85,10 +84,10 @@ def find_aggregation_in_expression(expr: str) -> str | None:
     for agg in common:
         if f"{agg}(" in upper:
             return agg.lower()
-    for start, end, text in iter_identifiers(expr):
-        k = next_nonspace(expr, end)
-        if k < len(expr) and expr[k] == "(" and text.lower() not in _NON_AGG_FN:
-            return text.lower()
+    toks = tokenize(expr)
+    for i, t in enumerate(toks):
+        if toks.is_call(i) is not None and t.upper.lower() not in _NON_AGG_FN:
+            return t.upper.lower()
     return None
 
 
@@ -108,14 +107,16 @@ def expand_derived_measure_expr(
     by_name = {m.column_name.lower(): m for m in view.measures}
     pieces: list[str] = []
     last = 0
-    for start, end, text in iter_identifiers(expr):
-        low = text.lower()
-        m = by_name.get(low)
+    toks = tokenize(expr)
+    for i, t in enumerate(toks):
+        low = t.upper.lower()
+        m = by_name.get(low) if t.kind is WORD else None
         if m is None or low in _exclude:
             continue
-        k = next_nonspace(expr, end)
-        if k < len(expr) and expr[k] in "(.":
+        k = toks.code(i + 1)
+        if toks.is_punct(k, "(") or toks.is_punct(k, "."):
             continue
+        start, end = t.start, t.end
         if extract_aggregation_function(m.expression) is None and find_aggregation_in_expression(m.expression) is None:
             continue
         inner = expand_derived_measure_expr(
@@ -128,13 +129,6 @@ def expand_derived_measure_expr(
     return "".join(pieces)
 
 
-# -- percentile WITHIN GROUP normalization (D4) -------------------------------
-
-_WG_RE = re.compile(
-    r"\b(PERCENTILE_CONT|PERCENTILE_DISC)\s*\(", re.IGNORECASE
-)
-
-
 # -- CREATE VIEW handling ------------------------------------------------------
 
 _CREATE_VIEW_RE = re.compile(
@@ -142,8 +136,6 @@ _CREATE_VIEW_RE = re.compile(
     r'((?:[A-Za-z_][\w$]*|"[^"]+")(?:\.(?:[A-Za-z_][\w$]*|"[^"]+"))*)\s+AS\b',
     re.IGNORECASE,
 )
-
-_AS_MEASURE_RE = re.compile(r"\sAS\s+MEASURE\s", re.IGNORECASE)
 
 
 @dataclass
@@ -156,41 +148,43 @@ class CreateViewResult:
     is_temp: bool = False
 
 
-def has_as_measure(sql: str) -> bool:
-    # outside strings/comments (measures.rs:200-205)
-    i, n = 0, len(sql)
-    upper = sql.upper()
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
+# words that may follow a plain alias named `measure`
+_ALIAS_FOLLOWERS = SQL_KEYWORDS | {"MINUS", "SORT", "DISTRIBUTE", "CLUSTER"}
+
+
+def as_measure_sites(toks: Tokens) -> list[tuple[int, int]]:
+    """(AS index, name index) for each `AS MEASURE <name>` in the token
+    list, outside strings and comments (measures.rs:200-205;
+    measures.test:130).  Any whitespace or comment may separate the
+    words.  A plain alias named `measure` (`x AS measure FROM t`) is
+    legal SQL, so a measure name must follow."""
+    sites = []
+    for i in range(len(toks)):
+        if not toks.is_word(i, "AS"):
             continue
-        if upper.startswith(" AS MEASURE ", i):
-            return True
-        i += 1
-    return False
+        k = toks.code(i + 1)
+        if not toks.is_word(k, "MEASURE"):
+            continue
+        m = toks.code(k + 1)
+        name = toks[m] if m < len(toks) else None
+        if name is not None and (
+            (name.kind is WORD and name.upper not in _ALIAS_FOLLOWERS)
+            or (name.kind is QIDENT and name.end - name.start > 2)
+        ):
+            sites.append((i, m))
+    return sites
 
 
-def _find_expression_start(sql: str, as_measure_pos: int) -> int:
-    """Walk back from ` AS MEASURE ` to the start of the select item
-    (reference find_expression_start: back to previous top-level comma or
-    SELECT)."""
-    depth = 0
-    i = as_measure_pos - 1
-    while i >= 0:
-        c = sql[i]
-        if c == ")":
-            depth += 1
-        elif c == "(":
-            if depth == 0:
-                return i + 1
-            depth -= 1
-        elif c == "," and depth == 0:
-            return i + 1
-        elif depth == 0 and c in "Tt" and sql[max(0, i - 5): i + 1].upper() == "SELECT":
-            if is_word_boundary(sql, i - 5, i + 1):
-                return i + 1
-        i -= 1
+def _expression_start(toks: Tokens, as_idx: int) -> int:
+    """Offset where the select item ending at token `as_idx` begins:
+    after the previous comma or SELECT at its depth, or after the paren
+    that encloses it (reference find_expression_start)."""
+    depth = toks[as_idx].depth
+    for j in range(as_idx - 1, -1, -1):
+        t = toks[j]
+        if t.depth < depth or (t.depth == depth and (
+                toks.is_punct(j, ",") or toks.is_word(j, "SELECT"))):
+            return t.end
     return 0
 
 
@@ -200,27 +194,17 @@ def process_create_view(sql: str) -> CreateViewResult:
     is_temp = bool(m and m.group(2))
     view_name = unquote_ident(m.group(3).split(".")[-1]) if m else None
 
-    if not has_as_measure(sql):
+    toks = tokenize(sql)
+    sites = as_measure_sites(toks)
+    if not sites:
         return CreateViewResult(False, view_name, sql, None, is_replace, is_temp)
 
-    upper = sql.upper()
     infos: list[tuple[str, str, int, int]] = []  # name, expr, expr_start, name_end
-    search = 0
-    while True:
-        off = upper.find(" AS MEASURE ", search)
-        if off < 0:
-            break
-        after = off + len(" AS MEASURE ")
-        mm = re.match(r'\s*([A-Za-z_][\w$]*|"[^"]+")', sql[after:])
-        if not mm:
-            search = off + 1
-            continue
-        name = unquote_ident(mm.group(1))
-        name_end = after + mm.end()
-        expr_start = _find_expression_start(sql, off)
-        expr = sql[expr_start:off].strip()
-        infos.append((name, expr, expr_start, name_end))
-        search = name_end
+    for as_idx, name_idx in sites:
+        expr_start = _expression_start(toks, as_idx)
+        expr = sql[expr_start:toks[as_idx].start].strip()
+        infos.append((unquote_ident(toks.text(name_idx)), expr, expr_start,
+                      toks[name_idx].end))
 
     measures: list[ViewMeasure] = []
     replacements: list[tuple[int, int, str]] = []
@@ -252,10 +236,9 @@ def process_create_view(sql: str) -> CreateViewResult:
     # non-decomposable aggregates materialized in the view require grouping
     # when dimensions are projected (measures.rs:4554-4570)
     view_query = _extract_view_query(clean_sql) or clean_sql
-    if has_materialized and find_top_level_keyword(view_query, "GROUP BY") is None:
-        stop = find_first_top_level_keyword(
-            view_query, 0, ["ORDER BY", "LIMIT", "HAVING"]
-        )
+    vq = tokenize(view_query)
+    if has_materialized and vq.keyword("GROUP BY") is None:
+        stop = vq.first_keyword(("ORDER BY", "LIMIT", "HAVING"))
         insert = stop[0] if stop else len(view_query.rstrip().rstrip(";"))
         new_query = (
             view_query[:insert].rstrip() + " GROUP BY ALL " + view_query[insert:]
@@ -304,30 +287,29 @@ def _extract_base_relation_sql(view_query: str) -> str | None:
     query = view_query.strip().rstrip(";").strip()
     if not query:
         return None
-    for kw in ("UNION", "INTERSECT", "EXCEPT"):
-        if find_top_level_keyword(query, kw) is not None:
-            return f"SELECT * FROM ({query})"
-    sel = find_top_level_keyword(query, "SELECT")
+    toks = tokenize(query)
+    if toks.first_keyword(("UNION", "INTERSECT", "EXCEPT")) is not None:
+        return f"SELECT * FROM ({query})"
+    sel = toks.keyword("SELECT")
     if sel is None:
         return None
-    from_pos = find_top_level_keyword(query, "FROM", sel)
+    from_pos = toks.keyword("FROM", sel)
     if from_pos is None:
         return None
-    stop = find_first_top_level_keyword(
-        query,
+    stop = toks.first_keyword(
+        ("WHERE", "GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "WINDOW"),
         from_pos + 4,
-        ["WHERE", "GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "WINDOW"],
     )
     from_end = stop[0] if stop else len(query)
     from_clause = query[from_pos + 4 : from_end].strip()
     if not from_clause:
         return None
     where_sql = ""
-    wpos = find_top_level_keyword(query, "WHERE", from_pos)
+    wpos = toks.keyword("WHERE", from_pos)
     if wpos is not None:
-        wstop = find_first_top_level_keyword(
-            query, wpos + 5,
-            ["GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "WINDOW"],
+        wstop = toks.first_keyword(
+            ("GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "WINDOW"),
+            wpos + 5,
         )
         wend = wstop[0] if wstop else len(query)
         cond = query[wpos + 5 : wend].strip()

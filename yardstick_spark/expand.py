@@ -35,28 +35,33 @@ from .modifiers import (
     parse_at_content,
     resolve_current_in_expr,
 )
+from .ddl import as_measure_sites, find_aggregation_in_expression
 from .parser import (
+    SETOP_KEYWORDS,
+    TAIL_KEYWORDS,
     SelectInfo,
     group_by_uses_grouping_sets,
     parse_select,
     resolve_group_by_cols,
 )
 from .sqlutil import (
+    COMMENT,
+    NUMBER,
+    PUNCT,
+    QIDENT,
     SQL_KEYWORDS,
+    WORD,
+    Tokens,
     YardstickError,
-    find_first_top_level_keyword,
     find_matching_paren,
-    find_top_level_keyword,
-    is_word_boundary,
     iter_identifiers,
-    next_nonspace,
-    prev_nonspace,
     normalize_dim_key,
     normalize_ws,
     replace_identifiers,
-    skip_code_unit,
+    retokenize,
     split_top_level,
     strip_qualifiers,
+    tokenize,
     unquote_ident,
 )
 
@@ -110,25 +115,21 @@ class CtxSpec:
 
 # -- sugar rewrites ------------------------------------------------------------
 
+_CURLY_RE = re.compile(r"\{(\w+)\}")
 
-def expand_curly_braces(sql: str) -> str:
+
+def expand_curly_braces(toks: Tokens) -> str:
     """`{m}` -> `AGGREGATE(m)` (measures.rs:994-1018)."""
+    sql = toks.sql
     out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            out.append(sql[i:j])
-            i = j
-            continue
-        if sql[i] == "{":
-            m = re.match(r"\{(\w+)\}", sql[i:])
-            if m:
-                out.append(f"AGGREGATE({m.group(1)})")
-                i += m.end()
-                continue
-        out.append(sql[i])
-        i += 1
+    last = 0
+    for t in toks:
+        m = _CURLY_RE.match(sql, t.start) if t.upper == "{" else None
+        if m:
+            out.append(sql[last:t.start])
+            out.append(f"AGGREGATE({m.group(1)})")
+            last = m.end()
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -146,51 +147,42 @@ def parse_simple_measure_ref(expr: str) -> tuple[str | None, str] | None:
     return qual, unquote_ident(m.group(2))
 
 
-def rewrite_measure_at_refs(sql: str, known: set[str]) -> str:
+def rewrite_measure_at_refs(toks: Tokens, known: set[str]) -> str:
     """`m AT (...)` -> `AGGREGATE(m) AT (...)` (measures.rs:834-951)."""
+    sql = toks.sql
     if not known:
         return sql
-    upper = sql.upper()
-    repls: list[tuple[int, int, str]] = []
-    i, n = 0, len(sql)
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
+    out: list[str] = []
+    last = 0
+    for i in range(len(toks)):
+        if not toks.is_word(i, "AT") or toks.is_call(i) is None:
             continue
-        if upper.startswith("AT", i) and is_word_boundary(sql, i, i + 2):
-            k = next_nonspace(sql, i + 2)
-            if k < n and sql[k] == "(":
-                b = _find_previous_ref_bounds(sql, i)
-                if b:
-                    token = sql[b[0]: b[1]].strip()
-                    ref = parse_simple_measure_ref(token)
-                    if ref and ref[1].lower() in known:
-                        repls.append((b[0], b[1], f"AGGREGATE({token})"))
-            i += 2
+        lo = _ref_chain_start(toks, i)
+        if lo is None:
             continue
-        i += 1
-    for s, e, r in sorted(repls, key=lambda x: -x[0]):
-        sql = sql[:s] + r + sql[e:]
-    return sql
+        start, end = toks[lo].start, toks[i - 1].end
+        ref = parse_simple_measure_ref(sql[start:end])
+        if ref and ref[1].lower() in known:
+            out.append(sql[last:start])
+            out.append(f"AGGREGATE({sql[start:end]})")
+            last = end
+    out.append(sql[last:])
+    return "".join(out)
 
 
-def _find_previous_ref_bounds(sql: str, at_pos: int) -> tuple[int, int] | None:
-    """Bounds of the identifier token chain immediately before AT."""
-    i = at_pos - 1
-    while i >= 0 and sql[i].isspace():
+def _ref_chain_start(toks: Tokens, at: int) -> int | None:
+    """Index of the first token of the unbroken identifier chain (`v.m`,
+    `"m"`) right before token `at`, or None (`f(x) AT (` is an AGGREGATE
+    chain, handled elsewhere)."""
+    i = at - 1
+    while i >= 0:
+        t = toks[i]
+        chained = (t.kind in (WORD, NUMBER) or t.upper in (".", "$")
+                   or (t.kind is QIDENT and toks.sql[t.start] == '"'))
+        if not chained or (i < at - 1 and t.end != toks[i + 1].start):
+            break
         i -= 1
-    if i < 0:
-        return None
-    end = i + 1
-    if sql[i] == ")":
-        return None  # `...) AT (` — function call, handled as AGGREGATE chain
-    while i >= 0 and (sql[i].isalnum() or sql[i] in '_."$'):
-        i -= 1
-    start = i + 1
-    if start >= end:
-        return None
-    return start, end
+    return i + 1 if i + 1 < at else None
 
 
 def rewrite_implicit_measure_refs(
@@ -206,7 +198,7 @@ def rewrite_implicit_measure_refs(
         ref = parse_simple_measure_ref(it.expr)
         if not ref or ref[1].lower() not in measures_for_query:
             continue
-        if re.search(r"\sAT\s*\(", it.text, re.IGNORECASE):
+        if tokenize(it.text).find_call("AT") is not None:
             continue
         new = f"AGGREGATE({it.expr.strip()}) {DEFAULT_CONTEXT_MARKER}"
         if it.alias:
@@ -221,179 +213,108 @@ def rewrite_implicit_measure_refs(
 
 # -- AGGREGATE call-site scanning ----------------------------------------------
 
-_AGG_START_RE = re.compile(r"\bAGGREGATE\s*\(", re.IGNORECASE)
 
-
-def find_aggregate_sites(sql: str) -> list[AggregateSite]:
+def find_aggregate_sites(toks: Tokens) -> list[AggregateSite]:
+    sql = toks.sql
     sites: list[AggregateSite] = []
-    i, n = 0, len(sql)
-    upper = sql.upper()
+    i, n = 0, len(toks)
     while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
+        k = toks.is_call(i) if toks.is_word(i, "AGGREGATE") else None
+        if k is None or toks[k].match < 0:
+            i += 1
             continue
-        if upper.startswith("AGGREGATE", i) and is_word_boundary(sql, i, i + 9):
-            k = next_nonspace(sql, i + 9)
-            if k < n and sql[k] == "(":
-                close = find_matching_paren(sql, k)
-                if close is None:
-                    i += 9
-                    continue
-                content = sql[k + 1 : close]
-                if len(split_top_level(content)) != 1:
-                    # DuckDB's native aggregate(list, 'fn') — don't intercept
-                    # (S13, no_semantic_prefix.test:2151-2181)
-                    i = close + 1
-                    continue
-                ref = parse_simple_measure_ref(content)
-                if ref is None:
-                    i = close + 1
-                    continue
-                end = close + 1
-                modifiers: list[Modifier] = []
-                while True:
-                    p = next_nonspace(sql, end)
-                    if p < n and upper.startswith("AT", p) and is_word_boundary(sql, p, p + 2):
-                        q = next_nonspace(sql, p + 2)
-                        if q < n and sql[q] == "(":
-                            c2 = find_matching_paren(sql, q)
-                            if c2 is None:
-                                break
-                            modifiers.extend(parse_at_content(sql[q + 1 : c2]))
-                            end = c2 + 1
-                            continue
-                    break
-                default_ctx = False
-                p = end
-                while p < n and sql[p].isspace():
-                    p += 1
-                if sql.startswith(DEFAULT_CONTEXT_MARKER, p):
-                    default_ctx = True
-                    end = p + len(DEFAULT_CONTEXT_MARKER)
-                sites.append(
-                    AggregateSite(
-                        measure_raw=content.strip(),
-                        measure_name=ref[1],
-                        modifiers=modifiers,
-                        start=i,
-                        end=end,
-                        default_context=default_ctx,
-                    )
-                )
-                i = end
-                continue
-            i += 9
+        close = toks[k].match
+        if any(toks[j].depth == toks[k].depth + 1 and toks.is_punct(j, ",")
+               for j in range(k + 1, close)):
+            # DuckDB's native aggregate(list, 'fn') — don't intercept
+            # (S13, no_semantic_prefix.test:2151-2181)
+            i = close + 1
             continue
-        i += 1
+        content = sql[toks[k].end:toks[close].start]
+        ref = parse_simple_measure_ref(content)
+        if ref is None:
+            i = close + 1
+            continue
+        last = close
+        modifiers: list[Modifier] = []
+        while True:
+            p = toks.code(last + 1)
+            q = toks.is_call(p) if toks.is_word(p, "AT") else None
+            if q is None or toks[q].match < 0:
+                break
+            last = toks[q].match
+            modifiers.extend(parse_at_content(sql[toks[q].end:toks[last].start]))
+        default_ctx = (
+            last + 1 < n and toks[last + 1].kind is COMMENT
+            and toks.text(last + 1) == DEFAULT_CONTEXT_MARKER
+        )
+        if default_ctx:
+            last += 1
+        sites.append(
+            AggregateSite(
+                measure_raw=content.strip(),
+                measure_name=ref[1],
+                modifiers=modifiers,
+                start=toks[i].start,
+                end=toks[last].end,
+                default_context=default_ctx,
+            )
+        )
+        i = last + 1
     return sites
 
 
-def _has_inline_as_measure(sql: str) -> bool:
-    """True when a real `AS MEASURE` token sequence appears in the
-    statement — comment/string-aware (measures.test:130 requires that a
-    comment merely CONTAINING the words is not intercepted)."""
-    i, n = 0, len(sql)
-    upper = sql.upper()
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
-            continue
-        if upper.startswith("AS", i) and is_word_boundary(sql, i, i + 2):
-            k = next_nonspace(sql, i + 2)
-            if (
-                k < n
-                and upper.startswith("MEASURE", k)
-                and is_word_boundary(sql, k, k + 7)
-            ):
-                # a plain alias NAMED measure (`x AS measure FROM t`)
-                # is legal SQL: only flag when a measure NAME follows
-                m = next_nonspace(sql, k + 7)
-                if m < n and (sql[m] in '"`' or sql[m].isalpha()
-                              or sql[m] == "_"):
-                    word = re.match(
-                        r'[A-Za-z_][\w$]*|"[^"]+"|`[^`]+`', sql[m:]
-                    )
-                    if word and word.group(0).upper() not in (
-                        SQL_KEYWORDS
-                        # Spark-dialect words that can follow an alias
-                        | {"MINUS", "SORT", "DISTRIBUTE", "CLUSTER"}
-                    ):
-                        return True
-            i += 2
-            continue
-        i += 1
-    return False
-
-
-def has_aggregate_function(sql: str) -> bool:
-    i, n = 0, len(sql)
-    upper = sql.upper()
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
-            continue
-        if upper.startswith("AGGREGATE", i) and is_word_boundary(sql, i, i + 9):
-            k = next_nonspace(sql, i + 9)
-            if k < n and sql[k] == "(":
-                return True
-            i += 9
-            continue
-        i += 1
-    return False
+def _has_measure_syntax(toks: Tokens) -> bool:
+    """An `AGGREGATE(` or `AT (` call, or a `{m}` shorthand."""
+    return any(
+        (toks.is_word(i, "AGGREGATE", "AT") and toks.is_call(i) is not None)
+        or (t.upper == "{" and _CURLY_RE.match(toks.sql, t.start))
+        for i, t in enumerate(toks)
+    )
 
 
 # -- CTE recursion (S3, measures.rs:2113-2251) ---------------------------------
 
+_CTE_RE = re.compile(
+    r'\s*(RECURSIVE\s+)?([A-Za-z_][\w$]*|"[^"]+")\s*(\([^)]*\)\s*)?AS\s*\(',
+    re.IGNORECASE,
+)
 
-def expand_cte_queries(sql: str, expander) -> tuple[str, bool, list[str]]:
-    stripped = sql.lstrip()
-    offset = len(sql) - len(stripped)
-    if not stripped.upper().startswith("WITH") or not is_word_boundary(
-        stripped, 0, 4
-    ):
+
+def expand_cte_queries(toks: Tokens, expander) -> tuple[str, bool, list[str]]:
+    sql = toks.sql
+    if not toks.is_word(0, "WITH"):
         return sql, False, []
-    i = offset + 4
+    i = toks[0].end
     had = False
     warnings: list[str] = []
     out = sql
     shift = 0
-    n = len(sql)
     while True:
-        m = re.match(r'\s*(RECURSIVE\s+)?([A-Za-z_][\w$]*|"[^"]+")\s*(\([^)]*\)\s*)?AS\s*\(',
-                     sql[i:], re.IGNORECASE)
-        if not m:
+        m = _CTE_RE.match(sql, i)
+        o = toks.at(m.end() - 1) if m else None
+        if o is None or toks[o].match < 0:
             break
-        open_pos = i + m.end() - 1
-        close = find_matching_paren(sql, open_pos)
-        if close is None:
-            break
+        open_pos, close = toks[o].start, toks[toks[o].match].start
         body = sql[open_pos + 1 : close]
         res = expander(body)
+        had = had or res.had_aggregate
+        warnings.extend(res.warnings)
         if res.sql != body:
-            had = had or res.had_aggregate
-            warnings.extend(res.warnings)
             out = out[: open_pos + 1 + shift] + res.sql + out[close + shift :]
             shift += len(res.sql) - len(body)
-        else:
-            had = had or res.had_aggregate
-            warnings.extend(res.warnings)
-        k = next_nonspace(sql, close + 1)
-        if k < n and sql[k] == ",":
-            i = k + 1
+        k = toks.code(toks[o].match + 1)
+        if toks.is_punct(k, ","):
+            i = toks[k].end
             continue
-        # main query begins at k
+        # main query begins at token k
+        k = toks[k].start if k < len(toks) else len(sql)
         main = sql[k:]
         res = expander(main)
+        had = had or res.had_aggregate
+        warnings.extend(res.warnings)
         if res.sql != main:
-            had = had or res.had_aggregate
-            warnings.extend(res.warnings)
             out = out[: k + shift] + res.sql
-        else:
-            had = had or res.had_aggregate
-            warnings.extend(res.warnings)
         return out, had, warnings
     return out, had, warnings
 
@@ -428,7 +349,8 @@ class QueryExpander:
 
     def expand(self, sql: str) -> ExpandResult:
         self._used_views: set[str] = getattr(self, "_used_views", set())
-        if _has_inline_as_measure(sql):
+        toks = tokenize(sql)
+        if as_measure_sites(toks):
             # AS MEASURE is a CREATE VIEW construct in the reference
             # (every corpus use is a view body); left in a plain query
             # it would half-expand into a confusing downstream parse
@@ -443,8 +365,13 @@ class QueryExpander:
                     "query it with AGGREGATE(...)"
                 ),
             )
+        if toks.error and _has_measure_syntax(toks):
+            return ExpandResult(
+                sql, had_aggregate=True,
+                error=f"malformed measure statement: {toks.error}",
+            )
         # CTE recursion first
-        body, had_cte, cte_warnings = expand_cte_queries(sql, self.expand)
+        body, had_cte, cte_warnings = expand_cte_queries(toks, self.expand)
         if body != sql:
             res = ExpandResult(body, had_aggregate=had_cte)
             res.warnings = cte_warnings
@@ -452,17 +379,18 @@ class QueryExpander:
             return res
 
         known = self.catalog.known_measure_names()
-        out = expand_curly_braces(sql)
+        out = expand_curly_braces(toks)
         try:
             out = self._expand_yardstick_tablefn(out)
-            out = rewrite_measure_at_refs(out, known)
+            out = rewrite_measure_at_refs(retokenize(toks, out), known)
             out = self._expand_subqueries(out)
         except _SubqueryExpandError as e:
             return self._merge_pending(
                 ExpandResult(out, had_aggregate=True, error=str(e),
                              used_views=set(self._used_views)))
 
-        info = parse_select(out)
+        toks = retokenize(toks, out)
+        info = parse_select(out, toks)
         if info is not None and known:
             by_view = self.catalog.measures_by_view()
             measures_here: set[str] = set()
@@ -474,9 +402,10 @@ class QueryExpander:
                 new = rewrite_implicit_measure_refs(out, info, measures_here)
                 if new != out:
                     out = new
-                    info = parse_select(out)
+                    toks = tokenize(out)
+                    info = parse_select(out, toks)
 
-        if not has_aggregate_function(out):
+        if toks.find_call("AGGREGATE") is None:
             return self._merge_pending(
                 ExpandResult(out, had_aggregate=(out != sql),
                              used_views=set(self._used_views)))
@@ -485,13 +414,13 @@ class QueryExpander:
                 ExpandResult(out, had_aggregate=True,
                              used_views=set(self._used_views)))
 
-        sites = find_aggregate_sites(out)
+        sites = find_aggregate_sites(toks)
         if not sites:
             return self._merge_pending(
                 ExpandResult(out, had_aggregate=(out != sql),
                              used_views=set(self._used_views)))
 
-        res = self._expand_select(out, info, sites)
+        res = self._expand_select(toks, info, sites)
         res.used_views |= self._used_views
         return self._merge_pending(res)
 
@@ -544,36 +473,24 @@ class QueryExpander:
         out = sql
         pos = 0
         while True:
+            toks = tokenize(out)
             found = None
-            i, n = pos, len(out)
-            while i < n:
-                j = skip_code_unit(out, i)
-                if j > i:
-                    i = j
-                    continue
-                if out[i] == "(":
-                    k = next_nonspace(out, i + 1)
-                    upper = out.upper()
-                    if (
-                        upper.startswith("SELECT", k)
-                        and is_word_boundary(out, k, k + 6)
-                    ) or (
-                        upper.startswith("WITH", k)
-                        and is_word_boundary(out, k, k + 4)
-                    ):
-                        close = find_matching_paren(out, i)
-                        if close is not None:
-                            content = out[i + 1 : close]
-                            if has_aggregate_function(content):
-                                found = (i, close, content)
-                                break
-                            pos_next = close + 1
-                            i = pos_next
-                            continue
+            i = toks.after(pos)
+            while i < len(toks):
+                close = toks[i].match
+                if (
+                    toks.is_punct(i, "(") and close > i
+                    and toks.is_word(toks.code(i + 1), "SELECT", "WITH")
+                ):
+                    if toks.find_call("AGGREGATE", i + 1, close) is not None:
+                        found = (toks[i].start, toks[close].start)
+                        break
+                    i = close
                 i += 1
             if not found:
                 return out
-            start, close, content = found
+            start, close = found
+            content = out[start + 1 : close]
             res = self.expand(content)
             self._pending_warnings = getattr(self, "_pending_warnings", [])
             for w in res.warnings:
@@ -587,8 +504,9 @@ class QueryExpander:
     # .. the core ..
 
     def _expand_select(
-        self, sql: str, info: SelectInfo, sites: list[AggregateSite]
+        self, toks: Tokens, info: SelectInfo, sites: list[AggregateSite]
     ) -> ExpandResult:
+        sql = toks.sql
         warnings: list[str] = []
         primary = info.primary_table
         primary_name = primary.name if primary else ""
@@ -640,7 +558,7 @@ class QueryExpander:
         inlined = False
         # window functions are not valid in HAVING — window-inline
         # candidates positioned there keep the join path
-        having_pos = find_top_level_keyword(sql, "HAVING")
+        having_pos = toks.keyword("HAVING")
         for site in sorted(sites, key=lambda s: -s.start):
             resolved = self.catalog.resolve(
                 site.measure_name,
@@ -874,14 +792,13 @@ class QueryExpander:
             )
             for s in sites
         )
+        out_toks = tokenize(out)
         if (
             has_agg_position_site
-            and find_top_level_keyword(out, "GROUP BY") is None
+            and out_toks.keyword("GROUP BY") is None
             and dim_cols
         ):
-            stop = find_first_top_level_keyword(
-                out, 0, ["HAVING", "QUALIFY", "WINDOW", "ORDER BY", "LIMIT", "OFFSET"]
-            )
+            stop = out_toks.first_keyword(TAIL_KEYWORDS[1:])
             semi = out.rstrip()
             trailing_semi = semi.endswith(";")
             if stop:
@@ -896,7 +813,7 @@ class QueryExpander:
             else:
                 body = semi[:-1] if trailing_semi else out.rstrip()
                 out = body.rstrip() + " GROUP BY " + ", ".join(dim_cols) + (";" if trailing_semi else "")
-        out = self._collapse_multifact_relations(out, info, sites, sql)
+        out = self._collapse_multifact_relations(out, info, toks)
         out = self._strip_alias_namespace(out, info)
         out = _hoist_order_by_subqueries(out)
         return ExpandResult(out, had_aggregate=True, warnings=warnings)
@@ -922,7 +839,7 @@ class QueryExpander:
         return re.sub(r"\balias\s*\.\s*([A-Za-z_]\w*)", repl, out)
 
     def _collapse_multifact_relations(
-        self, out: str, info: SelectInfo, sites, original_sql: str
+        self, out: str, info: SelectInfo, original: Tokens
     ) -> str:
         """Multi-fact scale optimization: when measure views are joined
         purely to align their dimensions (every select item is a dim or an
@@ -948,14 +865,13 @@ class QueryExpander:
                 return out
         # only grouped queries may collapse — row-level results (Listing
         # 12) depend on base cardinality
-        if find_top_level_keyword(out, "GROUP BY") is None:
+        out_toks = tokenize(out)
+        if out_toks.keyword("GROUP BY") is None:
             return out
         # any aggregate/window function outside AGGREGATE() sites -> bail
-        from .ddl import find_aggregation_in_expression
-
-        masked = original_sql
+        masked = original.sql
         for site in sorted(
-            find_aggregate_sites(original_sql), key=lambda s: -s.start
+            find_aggregate_sites(original), key=lambda s: -s.start
         ):
             masked = masked[: site.start] + "1" + masked[site.end:]
         if find_aggregation_in_expression(masked) is not None:
@@ -965,24 +881,18 @@ class QueryExpander:
         # column references, from the FINAL sql (includes ctx join keys)
         qualified: dict[str, set] = {}
         unqualified: set = set()
-        idents = list(iter_identifiers(out))
-        for idx, (s, e, t) in enumerate(idents):
-            nxt = next_nonspace(out, e)
-            if nxt < len(out) and out[nxt] == ".":
+        words = [i for i, t in enumerate(out_toks) if t.kind is WORD]
+        for n, i in enumerate(words):
+            if out_toks.is_punct(out_toks.code(i + 1), "."):
                 continue  # this token is a qualifier
-            prev_q = None
-            is_alias_def = False
-            if idx > 0:
-                ps, pe, pt = idents[idx - 1]
-                between = out[pe:s]
-                if between.strip() == ".":
-                    prev_q = pt.lower()
-                elif pt.upper() == "AS" and between.strip() == "":
-                    is_alias_def = True  # output alias, not a column ref
-            if prev_q:
-                qualified.setdefault(prev_q, set()).add(t.lower())
-            elif not is_alias_def:
-                unqualified.add(t.lower())
+            col = out_toks[i].upper.lower()
+            prev = words[n - 1] if n else None
+            if prev is not None and prev == i - 2 \
+                    and out_toks.is_punct(i - 1, "."):
+                qualified.setdefault(out_toks[prev].upper.lower(), set()).add(col)
+            elif not (prev == i - 1 and out_toks[prev].upper == "AS"):
+                # (a word right after AS is an output alias, not a column)
+                unqualified.add(col)
         new_out = out
         for t in info.tables:
             cols = self.view_columns(t.name)
@@ -1192,11 +1102,10 @@ class QueryExpander:
         view = self.catalog.get(tref.name)
         if view is None:
             return None
-        body = view.base_query
-        for kw in ("UNION", "INTERSECT", "EXCEPT"):
-            if find_top_level_keyword(body, kw) is not None:
-                return None
-        binfo = parse_select(body)
+        body = tokenize(view.base_query)
+        if body.first_keyword(SETOP_KEYWORDS) is not None:
+            return None
+        binfo = parse_select(body.sql, body)
         if (
             binfo is None
             or binfo.from_start is None
@@ -1205,7 +1114,7 @@ class QueryExpander:
             or binfo.having is not None
         ):
             return None
-        if binfo.select_pos > 0 and body[:binfo.select_pos].strip():
+        if binfo.select_pos > 0 and body.sql[:binfo.select_pos].strip():
             return None  # CTE prefix — injection point would be ambiguous
         # prove the outer FROM reference is rewritable BEFORE any site
         # commits to the inline path: a quoting/formatting shape the
@@ -1245,17 +1154,19 @@ class QueryExpander:
         }
         measure_names = {m.column_name.lower() for m in view.measures}
         cols: dict[str, None] = {}
-        n = len(expr)
-        for start, end, text in iter_identifiers(expr):
-            t = text.lower()
-            k = next_nonspace(expr, end)
-            if k < n and expr[k] == "(":
-                continue  # function name
-            p = prev_nonspace(expr, start)
-            if (p >= 0 and expr[p] == ".") or (k < n and expr[k] == "."):
-                return None  # qualified ref — scope changes under rewrite
-            if t.upper() in SQL_KEYWORDS:
+        toks = tokenize(expr)
+        for i, tok in enumerate(toks):
+            if tok.kind is not WORD:
                 continue
+            k = toks.code(i + 1)
+            if toks.is_punct(k, "("):
+                continue  # function name
+            if toks.is_punct(i - 1, ".") or toks.is_punct(k, "."):
+                return None  # qualified ref — scope changes under rewrite
+            if tok.upper in SQL_KEYWORDS:
+                continue
+            text = toks.text(i)
+            t = text.lower()
             if t in measure_names:
                 return None
             if t in passthrough:
@@ -1337,7 +1248,10 @@ class QueryExpander:
 
     def _attach_joins(self, sql: str, specs: list[CtxSpec]) -> str:
         info = parse_select(sql)
-        assert info is not None and info.from_end is not None
+        if info is None or info.from_end is None:
+            raise YardstickError(
+                "AT modifiers need a FROM clause to join contexts into"
+            )
         joins: list[str] = []
         for spec in specs:
             ctx_sql = self._render_ctx_sql(spec)
@@ -1372,14 +1286,15 @@ class QueryExpander:
             # WHERE; any other trailing clause (ORDER BY/LIMIT/GROUP
             # BY/HAVING) would make `FROM <tail> WHERE f` invalid or
             # swallow the clause into the condition — wrap instead
-            kw = find_first_top_level_keyword(
-                tail, 0, ["GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
-                          "QUALIFY", "WINDOW"]
+            tail_toks = tokenize(tail)
+            kw = tail_toks.first_keyword(
+                ("GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "QUALIFY",
+                 "WINDOW")
             )
             if kw is None:
                 if not spec.filter_sql:
                     return f"FROM {tail}"
-                wpos = find_top_level_keyword(tail, "WHERE")
+                wpos = tail_toks.keyword("WHERE")
                 if wpos is None:
                     return f"FROM {tail} WHERE {spec.filter_sql}"
                 cond = tail[wpos + 5:].strip()
@@ -1454,16 +1369,17 @@ def _hoist_order_by_subqueries(sql: str) -> str:
     Outer-alias refs inside the sort keys are re-qualified to __ys_qi's
     output columns; `X IN (SELECT ...)` sort keys become scalar
     count-comparisons (IN is likewise unsupported in projections)."""
-    info = parse_select(sql)
+    toks = tokenize(sql)
+    info = parse_select(sql, toks)
     if info is None or info.order_by is None:
         return sql
     if not re.search(r"\(\s*SELECT\b", info.order_by, re.IGNORECASE):
         return sql
-    ob_pos = find_top_level_keyword(sql, "ORDER BY")
+    ob_pos = toks.keyword("ORDER BY")
     if ob_pos is None:
         return sql
     ob_start = ob_pos + len("ORDER BY")
-    stop = find_first_top_level_keyword(sql, ob_start, ["LIMIT", "OFFSET"])
+    stop = toks.first_keyword(("LIMIT", "OFFSET"), ob_start)
     ob_end = stop[0] if stop else len(sql.rstrip().rstrip(";"))
     tail = sql[ob_end:].rstrip().rstrip(";")
     items = split_top_level(sql[ob_start:ob_end])
@@ -1555,69 +1471,29 @@ def _first_select_col(select_sql: str) -> str:
 
 def _split_top_level_and(cond: str) -> list[str]:
     parts: list[str] = []
-    i, n, last, depth = 0, len(cond), 0, 0
-    upper = cond.upper()
-    while i < n:
-        j = skip_code_unit(cond, i)
-        if j > i:
-            i = j
-            continue
-        c = cond[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and upper.startswith("AND", i)
-              and is_word_boundary(cond, i, i + 3)):
-            parts.append(cond[last:i])
-            last = i + 3
-            i += 3
-            continue
-        i += 1
+    last = 0
+    for t in tokenize(cond):
+        if t.depth == 0 and t.upper == "AND" and t.kind is WORD:
+            parts.append(cond[last:t.start])
+            last = t.end
     parts.append(cond[last:])
     return [p for p in (x.strip() for x in parts) if p]
 
 
 def _has_top_level_or(cond: str) -> bool:
-    i, n, depth = 0, len(cond), 0
-    upper = cond.upper()
-    while i < n:
-        j = skip_code_unit(cond, i)
-        if j > i:
-            i = j
-            continue
-        c = cond[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and upper.startswith("OR", i)
-              and is_word_boundary(cond, i, i + 2)):
-            return True
-        i += 1
-    return False
+    return tokenize(cond).keyword("OR") is not None
 
 
 def _find_top_level_eq(expr: str) -> int | None:
-    i, n, depth = 0, len(expr), 0
-    while i < n:
-        j = skip_code_unit(expr, i)
-        if j > i:
-            i = j
-            continue
-        c = expr[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c == "=":
+    """Offset of the first paren-depth-0 `=` that is not part of `<=`,
+    `>=`, `!=`, `==`, `=>` or `<=>`."""
+    for t in tokenize(expr):
+        if t.depth == 0 and t.kind is PUNCT and t.upper == "=":
+            i = t.start
             prev = expr[i - 1] if i > 0 else ""
-            nxt = expr[i + 1] if i + 1 < n else ""
-            if prev in "<>!=" or nxt in "=>":
-                i += 1
-                continue
-            return i
-        i += 1
+            nxt = expr[i + 1] if i + 1 < len(expr) else ""
+            if not (prev in "<>!=" or nxt in "=>"):
+                return i
     return None
 
 
@@ -1646,15 +1522,13 @@ def _extract_filter_correlations(
         return False
 
     def references_column(side: str) -> bool:
-        for s, e, t in iter_identifiers(side):
-            k = next_nonspace(side, e)
-            if k < len(side) and side[k] == "(":
-                continue  # function call
-            if t.upper() in ("NULL", "TRUE", "FALSE", "DATE", "TIMESTAMP",
-                             "INTERVAL", "AND", "OR", "NOT"):
-                continue
-            return True
-        return False
+        toks = tokenize(side)
+        return any(
+            t.kind is WORD and toks.is_call(i) is None
+            and t.upper not in ("NULL", "TRUE", "FALSE", "DATE", "TIMESTAMP",
+                                "INTERVAL", "AND", "OR", "NOT")
+            for i, t in enumerate(toks)
+        )
 
     corr: list[tuple[str, str]] = []
     rest: list[str] = []

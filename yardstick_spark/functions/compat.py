@@ -12,12 +12,7 @@ from __future__ import annotations
 
 import re
 
-from ..sqlutil import (
-    find_matching_paren,
-    iter_identifiers,
-    next_nonspace,
-    split_top_level,
-)
+from ..sqlutil import PUNCT, Tokens, retokenize, split_top_level, tokenize
 
 # name-for-name renames (applied only at call sites: `name(` )
 _FN_RENAMES = {
@@ -92,37 +87,24 @@ def strftime_format_to_java(fmt: str) -> str:
 
 def _rewrite_calls(sql: str, handler) -> str:
     """Scan for function calls and let `handler(name, args_text)` return a
-    replacement string or None to keep as-is.  Recurses into args."""
+    replacement string or None to keep as-is.  Recurses into args; the
+    outermost calls are handled left to right."""
+    toks = tokenize(sql)
     out: list[str] = []
     last = 0
-    i = 0
-    n = len(sql)
-    spans: list[tuple[int, int, str]] = []
-    for start, end, text in iter_identifiers(sql):
-        k = next_nonspace(sql, end)
-        if k < n and sql[k] == "(":
-            close = find_matching_paren(sql, k)
-            if close is not None:
-                spans.append((start, close + 1, text))
-    # process outermost-first, non-overlapping, left to right
-    chosen: list[tuple[int, int, str]] = []
-    last_end = 0
-    for start, end, name in spans:
-        if start >= last_end:
-            chosen.append((start, end, name))
-            last_end = end
-    for start, end, name in chosen:
-        open_paren = sql.index("(", start + len(name))
-        args = sql[open_paren + 1 : end - 1]
-        new_args = _rewrite_calls(args, handler)
-        repl = handler(name, new_args)
+    for i, t in enumerate(toks):
+        k = toks.is_call(i)
+        if k is None or t.start < last or toks[k].match < 0:
+            continue
+        close = toks[toks[k].match]
+        new_args = _rewrite_calls(sql[toks[k].end:close.start], handler)
+        repl = handler(sql[t.start:t.end], new_args)
         if repl is None:
-            repl = f"{sql[start:open_paren]}({new_args})"
-        out.append(sql[last:start])
+            repl = f"{sql[t.start:toks[k].start]}({new_args})"
+        out.append(sql[last:t.start])
         out.append(repl)
-        last = end
+        last = close.end
     out.append(sql[last:])
-    _ = i
     return "".join(out)
 
 
@@ -244,9 +226,6 @@ def normalize_expr_to_spark(sql: str) -> str:
     return _rewrite_calls(sql, handler)
 
 
-_DIV_INT_RE = re.compile(r"//")
-
-
 _MAIN_SCHEMA_RE = re.compile(r'\bmain\s*\.\s*(?=[A-Za-z_"])', re.IGNORECASE)
 
 
@@ -288,44 +267,25 @@ def _apply_value_corrections(sql: str) -> str:
 def convert_list_literals(sql: str) -> str:
     """DuckDB `[1, 2, 3]` list literals -> ARRAY(1, 2, 3).  A `[` directly
     after an identifier/closing bracket is indexing and is left alone."""
-    from ..sqlutil import skip_code_unit
-
+    toks = tokenize(sql)
     res: list[str] = []
-    i, n, prev = 0, len(sql), ""
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            res.append(sql[i:j])
-            prev = sql[j - 1]
-            i = j
+    last = 0
+    for i, t in enumerate(toks):
+        if t.start < last or t.kind is not PUNCT or t.upper != "[":
             continue
-        c = sql[i]
-        if c == "[" and not (prev.isalnum() or prev in "_)]\"`'"):
-            depth, k = 0, i
-            close = None
-            while k < n:
-                jj = skip_code_unit(sql, k)
-                if jj > k:
-                    k = jj
-                    continue
-                if sql[k] == "[":
-                    depth += 1
-                elif sql[k] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        close = k
-                        break
-                k += 1
-            if close is not None:
-                inner = convert_list_literals(sql[i + 1: close])
-                res.append(f"ARRAY({inner})")
-                prev = ")"
-                i = close + 1
-                continue
-        if not c.isspace():
-            prev = c
-        res.append(c)
-        i += 1
+        prev = sql[toks[i - 1].end - 1] if i else ""
+        if prev.isalnum() or prev in "_)]\"`'":
+            continue
+        depth = 0
+        for j in range(i, len(toks)):
+            if toks[j].kind is PUNCT and toks[j].upper in "[]":
+                depth += 1 if toks[j].upper == "[" else -1
+                if depth == 0:
+                    res.append(sql[last:t.start])
+                    res.append(f"ARRAY({convert_list_literals(sql[t.end:toks[j].start])})")
+                    last = toks[j].end
+                    break
+    res.append(sql[last:])
     return "".join(res)
 
 
@@ -361,37 +321,41 @@ def normalize_statement_to_spark(sql: str) -> str:
     return out
 
 
+_WINDOW_DEF_RE = re.compile(r'\s*([A-Za-z_][A-Za-z_0-9]*|"[^"]+")\s+AS\s*\(',
+                            re.IGNORECASE)
+
+
+def _window_defs(toks: Tokens) -> list[tuple[str, int, int]]:
+    """(name, `(` index, `)` index) of each `name AS (spec)` definition
+    in the statement's top-level WINDOW clause."""
+    pos = toks.keyword("WINDOW")
+    if pos is None:
+        return []
+    defs = []
+    pos += len("WINDOW")
+    while True:
+        m = _WINDOW_DEF_RE.match(toks.sql, pos)
+        o = toks.at(m.end() - 1) if m else None
+        if o is None or toks[o].match < 0:
+            break
+        close = toks[o].match
+        defs.append((m.group(1).strip('"').lower(), o, close))
+        if not toks.is_punct(close + 1, ","):
+            break
+        pos = toks[close + 1].end
+    return defs
+
+
 def _named_windows(select_sql: str) -> dict[str, str]:
     """Top-level `WINDOW name AS (spec), ...` definitions of a SELECT,
     with nested name references expanded (`w2 AS (w1 ORDER BY x)` —
     standard window-clause inheritance) so every returned spec is
     self-contained."""
-    from ..sqlutil import find_top_level_keyword
-
-    wpos = find_top_level_keyword(select_sql, "WINDOW")
-    if wpos is None:
-        return {}
-    defs: dict[str, str] = {}
-    i = wpos + len("WINDOW")
-    n = len(select_sql)
-    while True:
-        m = re.match(r'\s*([A-Za-z_][A-Za-z_0-9]*|"[^"]+")\s+AS\s*\(',
-                     select_sql[i:], re.IGNORECASE)
-        if not m:
-            break
-        name = m.group(1).strip('"').lower()
-        open_pos = i + m.end() - 1
-        close = find_matching_paren(select_sql, open_pos)
-        if close is None:
-            break
-        defs[name] = select_sql[open_pos + 1:close].strip()
-        i = close + 1
-        while i < n and select_sql[i].isspace():
-            i += 1
-        if i < n and select_sql[i] == ",":
-            i += 1
-        else:
-            break
+    toks = tokenize(select_sql)
+    defs = {
+        name: select_sql[toks[o].end:toks[c].start].strip()
+        for name, o, c in _window_defs(toks)
+    }
     # expand `name AS (other ORDER BY ...)` inheritance
     for name, spec in list(defs.items()):
         m = re.match(r"([A-Za-z_][A-Za-z_0-9]*)\b(.*)", spec, re.DOTALL)
@@ -421,37 +385,18 @@ def _expand_window_clause(select_sql: str, defs: dict[str, str]) -> str:
     """Rewrite a SELECT's top-level WINDOW clause so every definition
     is self-contained (inheritance references expanded) — Spark's
     window-clause grammar accepts only full specs inside the parens."""
-    from ..sqlutil import find_top_level_keyword
-
     if not defs:
         return select_sql
-    wpos = find_top_level_keyword(select_sql, "WINDOW")
-    if wpos is None:
-        return select_sql
-    out = select_sql
-    i = wpos + len("WINDOW")
-    while True:
-        m = re.match(r'\s*([A-Za-z_][A-Za-z_0-9]*|"[^"]+")\s+AS\s*\(',
-                     out[i:], re.IGNORECASE)
-        if not m:
-            break
-        name = m.group(1).strip('"').lower()
-        open_pos = i + m.end() - 1
-        close = find_matching_paren(out, open_pos)
-        if close is None:
-            break
+    toks = tokenize(select_sql)
+    out: list[str] = []
+    last = 0
+    for name, o, c in _window_defs(toks):
         if name in defs:
-            out = out[:open_pos + 1] + defs[name] + out[close:]
-            close = open_pos + 1 + len(defs[name])
-        i = close + 1
-        n = len(out)
-        while i < n and out[i].isspace():
-            i += 1
-        if i < n and out[i] == ",":
-            i += 1
-        else:
-            break
-    return out
+            out.append(select_sql[last:toks[o].end])
+            out.append(defs[name])
+            last = toks[c].start
+    out.append(select_sql[last:])
+    return "".join(out)
 
 
 def rewrite_qualify(sql: str) -> str:
@@ -464,44 +409,35 @@ def rewrite_qualify(sql: str) -> str:
     outside.  Applied bottom-up through subqueries; SELECTs without
     QUALIFY pass through byte-identical."""
     from ..parser import parse_select
-    from ..sqlutil import (
-        find_first_top_level_keyword,
-        find_top_level_keyword,
-        skip_code_unit,
-    )
 
     # recurse into parenthesized regions first (innermost QUALIFY wins)
-    i, n = 0, len(sql)
-    out = sql
-    while i < len(out):
-        j = skip_code_unit(out, i)
-        if j > i:
-            i = j
+    toks = tokenize(sql)
+    pieces: list[str] = []
+    last = 0
+    for i, t in enumerate(toks):
+        if t.depth or not toks.is_punct(i, "("):
             continue
-        if out[i] == "(":
-            close = find_matching_paren(out, i)
-            if close is None:
-                break
-            inner = out[i + 1:close]
-            new_inner = rewrite_qualify(inner)
-            if new_inner != inner:
-                out = out[:i + 1] + new_inner + out[close:]
-                close = i + 1 + len(new_inner)
-            i = close + 1
-            continue
-        i += 1
+        if t.match < 0:
+            break
+        close = toks[t.match].start
+        pieces.append(sql[last:t.end])
+        pieces.append(rewrite_qualify(sql[t.end:close]))
+        last = close
+    pieces.append(sql[last:])
+    out = "".join(pieces)
 
-    qpos = find_top_level_keyword(out, "QUALIFY")
+    toks = retokenize(toks, out)
+    qpos = toks.keyword("QUALIFY")
     if qpos is None:
         return out
-    info = parse_select(out)
+    info = parse_select(out, toks)
     if info is None or info.from_start is None:
         return out
     cond_start = qpos + len("QUALIFY")
-    tail_kw = find_first_top_level_keyword(
-        out, cond_start,
-        ["ORDER BY", "LIMIT", "OFFSET", "WINDOW",
-         "UNION", "INTERSECT", "EXCEPT"],
+    tail_kw = toks.first_keyword(
+        ("ORDER BY", "LIMIT", "OFFSET", "WINDOW",
+         "UNION", "INTERSECT", "EXCEPT"),
+        cond_start,
     )
     cond_end = tail_kw[0] if tail_kw else len(out)
     cond = out[cond_start:cond_end].strip().rstrip(";")
@@ -510,12 +446,13 @@ def rewrite_qualify(sql: str) -> str:
     # a WINDOW clause written AFTER the QUALIFY (DuckDB accepts both
     # orders) would land in the OUTER query after wrapping; relocate it
     # into the inner select so its names resolve for the projections
-    wpos = find_top_level_keyword(tail, "WINDOW")
+    tail_toks = tokenize(tail)
+    wpos = tail_toks.keyword("WINDOW")
     if wpos is not None:
-        wend_kw = find_first_top_level_keyword(
-            tail, wpos + len("WINDOW"),
-            ["ORDER BY", "LIMIT", "OFFSET",
-             "UNION", "INTERSECT", "EXCEPT"],
+        wend_kw = tail_toks.first_keyword(
+            ("ORDER BY", "LIMIT", "OFFSET",
+             "UNION", "INTERSECT", "EXCEPT"),
+            wpos + len("WINDOW"),
         )
         wend = wend_kw[0] if wend_kw else len(tail)
         head = head + " " + tail[wpos:wend].strip().rstrip(";")
@@ -560,27 +497,25 @@ _USING_SAMPLE_ROWS_RE = re.compile(
 )
 
 
+def _after_star(toks: Tokens, word: str) -> list[int]:
+    """Indices of `word` tokens directly following a `*` (plain `*` or a
+    qualified `t.*`)."""
+    return [i for i in range(1, len(toks))
+            if toks.is_word(i, word) and toks.is_punct(i - 1, "*")]
+
+
 def rewrite_star_exclude(sql: str) -> str:
     """DuckDB `* EXCLUDE (cols)` → Spark `* EXCEPT (cols)`.  Only the
     EXCLUDE keyword directly following a star (plain or qualified
     `t.*`) is touched, so identifiers/strings containing the word pass
     through untouched."""
-    from ..sqlutil import is_word_boundary, iter_code, prev_nonspace
-
-    upper = sql.upper()
+    toks = tokenize(sql)
     out = []
     last = 0
-    for i, c, depth in iter_code(sql):
-        if (
-            c in "Ee"
-            and upper.startswith("EXCLUDE", i)
-            and is_word_boundary(sql, i, i + 7)
-        ):
-            p = prev_nonspace(sql, i)
-            if p >= 0 and sql[p] == "*":
-                out.append(sql[last:i])
-                out.append("EXCEPT")
-                last = i + 7
+    for i in _after_star(toks, "EXCLUDE"):
+        out.append(sql[last:toks[i].start])
+        out.append("EXCEPT")
+        last = toks[i].end
     out.append(sql[last:])
     return "".join(out)
 
@@ -597,32 +532,14 @@ def rewrite_star_replace(sql: str) -> str:
     `SELECT *` output should name their columns (documented in
     LIMITATIONS.md §11).  Only REPLACE directly following a star
     (plain or qualified `t.*`) is touched."""
-    from ..sqlutil import is_word_boundary, iter_code, prev_nonspace
-
     while True:
-        upper = sql.upper()
-        hit = None
-        for i, c, depth in iter_code(sql):
-            if (
-                c in "Rr"
-                and upper.startswith("REPLACE", i)
-                and is_word_boundary(sql, i, i + 7)
-            ):
-                p = prev_nonspace(sql, i)
-                if p >= 0 and sql[p] == "*":
-                    j = i + 7
-                    while j < len(sql) and sql[j].isspace():
-                        j += 1
-                    if j < len(sql) and sql[j] == "(":
-                        hit = (i, j)
-                        break
-        if hit is None:
+        toks = tokenize(sql)
+        hit = next((i for i in _after_star(toks, "REPLACE")
+                    if toks.is_punct(i + 1, "(")), None)
+        if hit is None or toks[hit + 1].match < 0:
             return sql
-        i, open_pos = hit
-        close = find_matching_paren(sql, open_pos)
-        if close is None:
-            return sql
-        inner = sql[open_pos + 1:close]
+        close = toks[toks[hit + 1].match].start
+        inner = sql[toks[hit + 1].end:close]
         items = split_top_level(inner, ",")
         names, exprs = [], []
         for item in items:
@@ -636,7 +553,7 @@ def rewrite_star_replace(sql: str) -> str:
             names.append(m.group(2))
         except_list = ", ".join(names)
         repro = ", ".join(f"{e} AS {n}" for e, n in zip(exprs, names))
-        sql = (sql[:i] + f"EXCEPT ({except_list}), {repro}"
+        sql = (sql[:toks[hit].start] + f"EXCEPT ({except_list}), {repro}"
                + sql[close + 1:])
 
 

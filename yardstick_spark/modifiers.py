@@ -23,15 +23,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .sqlutil import (
-    find_matching_paren,
-    next_nonspace,
-    normalize_dim_key,
-    prev_nonspace,
-    iter_identifiers,
-    is_word_boundary,
-    skip_code_unit,
-)
+from .sqlutil import WORD, normalize_dim_key, tokenize
 
 
 @dataclass
@@ -63,7 +55,8 @@ class Visible:
 Modifier = AllGlobal | All | Set | Where | Visible
 
 
-_MOD_KEYWORDS = ("ALL", "SET", "WHERE", "VISIBLE")
+_MODIFIER_RE = re.compile(r"(ALL|SET|WHERE|VISIBLE)(?![A-Za-z0-9_$])",
+                          re.IGNORECASE)
 
 
 def _starts_with_modifier_keyword(s: str) -> bool:
@@ -84,11 +77,11 @@ def _parse_expression_or_identifier(s: str) -> tuple[str, str]:
     if not m:
         return "", s
     end = m.end()
-    k = next_nonspace(s, end)
-    if k < len(s) and s[k] == "(":
-        close = find_matching_paren(s, k)
-        if close is not None:
-            return s[: close + 1].strip(), s[close + 1 :]
+    toks = tokenize(s)
+    k = toks.code(toks.after(end))
+    if toks.is_punct(k, "(") and toks[k].match >= 0:
+        close = toks[toks[k].match].start
+        return s[: close + 1].strip(), s[close + 1 :]
     return s[:end], s[end:]
 
 
@@ -97,8 +90,9 @@ def parse_at_content(content: str) -> list[Modifier]:
     mods: list[Modifier] = []
     rest = content.strip()
     while rest:
-        upper = rest.upper()
-        if upper.startswith("ALL") and is_word_boundary(rest, 0, 3):
+        m = _MODIFIER_RE.match(rest)
+        kw = m.group(1).upper() if m else None
+        if kw == "ALL":
             after = rest[3:]
             if not after.strip():
                 mods.append(AllGlobal())
@@ -119,7 +113,7 @@ def parse_at_content(content: str) -> list[Modifier]:
                 mods.append(All(dim))
                 rest = rest2.strip()
             continue
-        if upper.startswith("SET") and is_word_boundary(rest, 0, 3):
+        if kw == "SET":
             after = rest[3:].lstrip()
             dim, after2 = _parse_expression_or_identifier(after)
             after2 = after2.lstrip()
@@ -132,12 +126,12 @@ def parse_at_content(content: str) -> list[Modifier]:
             mods.append(Set(dim, expr))
             rest = expr_part[cut:].strip()
             continue
-        if upper.startswith("WHERE") and is_word_boundary(rest, 0, 5):
+        if kw == "WHERE":
             # WHERE consumes the remainder of the clause
             mods.append(Where(rest[5:].strip()))
             rest = ""
             continue
-        if upper.startswith("VISIBLE") and is_word_boundary(rest, 0, 7):
+        if kw == "VISIBLE":
             mods.append(Visible())
             rest = rest[7:].strip()
             continue
@@ -148,29 +142,17 @@ def parse_at_content(content: str) -> list[Modifier]:
 def _find_next_modifier_kw(s: str) -> int:
     """Find index of the next top-level modifier keyword in a SET value
     expression (so `AT (SET year = year - 1 VISIBLE)` parses)."""
-    i, n = 0, len(s)
-    depth = 0
-    upper = s.upper()
-    while i < n:
-        j = skip_code_unit(s, i)
-        if j > i:
-            i = j
-            continue
-        c = s[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth = max(0, depth - 1)
-        elif depth == 0:
-            for kw in ("VISIBLE", "SET ", "WHERE "):
-                kwlen = len(kw.rstrip())
-                if upper.startswith(kw.rstrip(), i) and is_word_boundary(s, i, i + kwlen):
-                    if kw.rstrip() != "SET" or upper.startswith("SET ", i):
-                        # avoid cutting identifiers like `settings`
-                        if i > 0 and s[i - 1].isspace():
-                            return i
-        i += 1
-    return n
+    for t in tokenize(s):
+        if (
+            t.depth == 0 and t.kind is WORD
+            and t.upper in ("VISIBLE", "SET", "WHERE")
+            # after whitespace, and SET before a space: identifiers
+            # like `settings` are never cut
+            and t.start > 0 and s[t.start - 1].isspace()
+            and (t.upper != "SET" or s[t.end:t.end + 1] == " ")
+        ):
+            return t.start
+    return len(s)
 
 
 @dataclass
@@ -340,6 +322,9 @@ def where_has_simple_equality(where: str, dim_name: str) -> bool:
     return False
 
 
+_DIM_PATH_RE = re.compile(r"[A-Za-z_][\w$]*(\.[A-Za-z_][\w$]*)*")
+
+
 def resolve_current_in_expr(
     expr: str,
     group_by_cols: list[str],
@@ -347,36 +332,22 @@ def resolve_current_in_expr(
 ) -> str:
     """`CURRENT d` -> `d` iff single-valued in context, else NULL
     (measures.rs:3524-3619)."""
+    toks = tokenize(expr)
     out: list[str] = []
-    i, n = 0, len(expr)
-    while i < n:
-        j = skip_code_unit(expr, i)
-        if j > i:
-            out.append(expr[i:j])
-            i = j
+    last = 0
+    for i, t in enumerate(toks):
+        if t.start < last or not toks.is_word(i, "CURRENT"):
             continue
-        c = expr[i]
-        if c.isalpha() or c == "_":
-            start = i
-            i += 1
-            while i < n and (expr[i].isalnum() or expr[i] == "_"):
-                i += 1
-            token = expr[start:i]
-            if token.upper() == "CURRENT":
-                k = next_nonspace(expr, i)
-                m = re.match(r"[A-Za-z_][\w$]*(\.[A-Za-z_][\w$]*)*", expr[k:]) if k < n else None
-                if m:
-                    dim = m.group(0)
-                    dim_name = dim.split(".")[-1]
-                    single = dimension_in_group_by(dim, group_by_cols) or (
-                        outer_where is not None
-                        and where_has_simple_equality(outer_where, dim_name)
-                    )
-                    out.append(dim if single else "NULL")
-                    i = k + m.end()
-                    continue
-            out.append(token)
-            continue
-        out.append(c)
-        i += 1
+        k = toks.code(i + 1)
+        m = _DIM_PATH_RE.match(expr, toks[k].start) if k < len(toks) else None
+        if m:
+            dim = m.group(0)
+            single = dimension_in_group_by(dim, group_by_cols) or (
+                outer_where is not None
+                and where_has_simple_equality(outer_where, dim.split(".")[-1])
+            )
+            out.append(expr[last:t.start])
+            out.append(dim if single else "NULL")
+            last = m.end()
+    out.append(expr[last:])
     return "".join(out)

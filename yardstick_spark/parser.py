@@ -2,7 +2,7 @@
 
 Replaces the reference's DuckDB-parser FFI
 (/root/reference/src/yardstick_parser_ffi.cpp:1314-1434 parse_select) with a
-clause splitter built on sqlutil's code-region scanner.  We only need the
+clause splitter over sqlutil's token list.  We only need the
 *shape* of the query (item ranges, FROM tables, WHERE/GROUP BY/HAVING
 boundaries) — the rewritten SQL is handed to Spark's real parser.
 """
@@ -13,21 +13,18 @@ import re
 from dataclasses import dataclass, field
 
 from .sqlutil import (
-    find_first_top_level_keyword,
+    PUNCT,
+    SQL_KEYWORDS,
+    WORD,
+    Tokens,
     find_matching_paren,
-    find_top_level_keyword,
-    is_word_boundary,
-    iter_identifiers,
-    next_nonspace,
-    prev_nonspace,
-    skip_code_unit,
-    split_top_level,
     normalize_dim_key,
+    prev_nonspace,
+    split_top_level,
+    strip_comments,
+    tokenize,
     unquote_ident,
 )
-
-TAIL_KEYWORDS = ["GROUP BY", "HAVING", "QUALIFY", "WINDOW", "ORDER BY", "LIMIT", "OFFSET"]
-SETOP_KEYWORDS = ["UNION", "INTERSECT", "EXCEPT"]
 
 KNOWN_AGGREGATES = {
     # reference known-aggregate list (measures.rs:7816-7847) + Spark natives
@@ -101,8 +98,12 @@ class SelectInfo:
         return None
 
 
-_AGG_RE = re.compile(r"\bAGGREGATE\s*\(", re.IGNORECASE)
 _NUMBER_RE = re.compile(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")
+_TABLE_NAME_RE = re.compile(
+    r'^((?:[A-Za-z_][\w$]*|"[^"]+")(?:\.(?:[A-Za-z_][\w$]*|"[^"]+"))*)'
+)
+_JOIN_TYPE_WORDS = ("LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER",
+                    "SEMI", "ANTI", "NATURAL")
 
 
 def is_literal_constant(expr: str) -> bool:
@@ -120,51 +121,36 @@ def is_literal_constant(expr: str) -> bool:
     return False
 
 
-def contains_aggregate_fn(expr: str, extra: set[str] | None = None) -> bool:
-    """True if expr contains a call to a known aggregate function at any
-    depth, excluding inside OVER(...) windows (a window fn is not a group
-    aggregate for dimension classification — reference treats window items
-    as aggregates though, see is_aggregate flag use)."""
-    for start, end, text in iter_identifiers(expr):
-        k = next_nonspace(expr, end)
-        if k < len(expr) and expr[k] == "(":
-            low = text.lower()
-            if low in KNOWN_AGGREGATES or (extra and low in extra):
+def _calls_aggregate(toks: Tokens, lo: int, hi: int) -> bool:
+    """True if toks[lo:hi] calls a known aggregate function at any depth
+    (window calls included — items with OVER are aggregates for dimension
+    classification)."""
+    for i in range(lo, hi):
+        if toks[i].kind is WORD and toks.is_call(i) is not None:
+            if toks[i].upper.lower() in KNOWN_AGGREGATES:
                 return True
+    return False
+
+
+def _window_over(toks: Tokens, lo: int, hi: int) -> bool:
+    for i in range(lo, hi):
+        if toks.is_punct(i, ")"):
+            k = toks.code(i + 1)
+            if toks.is_word(k, "OVER"):
+                m = toks.code(k + 1)
+                if toks.is_punct(m, "(") or (m < len(toks)
+                                              and toks[m].kind is WORD):
+                    return True
     return False
 
 
 def has_window_over(expr: str) -> bool:
     """Detect `) OVER (` / `) OVER name` (measures.rs:3010-3126)."""
-    upper = expr.upper()
-    i = 0
-    n = len(expr)
-    while i < n:
-        j = skip_code_unit(expr, i)
-        if j > i:
-            i = j
-            continue
-        if expr[i] == ")":
-            k = next_nonspace(expr, i + 1)
-            if upper.startswith("OVER", k) and is_word_boundary(expr, k, k + 4):
-                m = next_nonspace(expr, k + 4)
-                if m < n and (expr[m] == "(" or expr[m].isalpha() or expr[m] == "_"):
-                    return True
-        i += 1
-    return False
+    toks = tokenize(expr)
+    return _window_over(toks, 0, len(toks))
 
 
-def find_top_level_as(expr: str) -> int | None:
-    pos = find_top_level_keyword(expr, "AS", 0)
-    while pos is not None:
-        return pos
-    return None
-
-
-def split_expr_alias(item: str) -> tuple[str, str | None]:
-    pos = find_top_level_keyword(item, "AS", 0)
-    if pos is not None:
-        return item[:pos].rstrip(), item[pos + 2 :].strip()
+def _split_implicit_alias(item: str) -> tuple[str, str | None]:
     # implicit alias: `expr ident` where expr doesn't end with an operator
     stripped = item.rstrip()
     m = re.search(r'([A-Za-z_][A-Za-z0-9_]*|"[^"]+")\s*$', stripped)
@@ -172,8 +158,6 @@ def split_expr_alias(item: str) -> tuple[str, str | None]:
         candidate = stripped[m.start():]
         before = prev_nonspace(stripped, m.start())
         if before >= 0 and (stripped[before].isalnum() or stripped[before] in ")'\"_]"):
-            from .sqlutil import SQL_KEYWORDS
-
             tok = candidate.strip()
             if (
                 tok.upper() not in SQL_KEYWORDS
@@ -195,178 +179,157 @@ def _looks_like_expr_end(expr: str) -> bool:
     )
 
 
-def parse_select(sql: str, extra_aggs: set[str] | None = None) -> SelectInfo | None:
-    """Split one SELECT statement (no leading WITH) into clause ranges."""
+_CLAUSES = ("FROM", "WHERE", "GROUP BY", "HAVING", "QUALIFY", "WINDOW",
+            "ORDER BY", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
+TAIL_KEYWORDS = ("GROUP BY", "HAVING", "QUALIFY", "WINDOW", "ORDER BY",
+                 "LIMIT", "OFFSET")
+SETOP_KEYWORDS = ("UNION", "INTERSECT", "EXCEPT")
+
+
+def parse_select(sql: str, toks: Tokens | None = None) -> SelectInfo | None:
+    """Split one SELECT statement (no leading WITH) into clause ranges,
+    from one walk over its paren-depth-0 keywords.  `toks` is the token
+    list of `sql` when the caller already has it."""
+    if toks is None:
+        toks = tokenize(sql)
     info = SelectInfo(sql=sql)
-    sel = find_top_level_keyword(sql, "SELECT", 0)
+    sel = toks.keyword("SELECT")
     if sel is None:
         return None
     info.select_pos = sel
     items_start = sel + len("SELECT")
-    k = next_nonspace(sql, items_start)
-    if sql.upper().startswith("DISTINCT", k) and is_word_boundary(sql, k, k + 8):
+    k = toks.code(toks.after(items_start))
+    if toks.is_word(k, "DISTINCT"):
         info.distinct = True
-        items_start = k + 8
-    from_pos = find_top_level_keyword(sql, "FROM", items_start)
+        items_start = toks[k].end
+    clauses = list(toks.keywords(_CLAUSES, items_start))
+
+    def first(names, start: int) -> int | None:
+        return next((p for p, kw in clauses if p >= start and kw in names),
+                    None)
+
+    def end_after(names, start: int) -> int:
+        pos = first(names, start)
+        return len(sql) if pos is None else pos
+
+    def body(start: int, end: int) -> str:
+        return sql[start:end].strip().rstrip(";").strip()
+
+    def after_by(pos: int) -> int:  # end of the BY in GROUP BY / ORDER BY
+        return toks[toks.at(pos) + 1].end
+
+    from_pos = first(("FROM",), items_start)
     if from_pos is None:
         # SELECT without FROM
-        tail = find_first_top_level_keyword(sql, items_start, TAIL_KEYWORDS)
-        items_end = tail[0] if tail else len(sql)
-        _parse_items(info, sql, items_start, items_end, extra_aggs)
+        _parse_items(info, toks, items_start, end_after(TAIL_KEYWORDS, items_start))
         return info
     info.from_start = from_pos
-    _parse_items(info, sql, items_start, from_pos, extra_aggs)
+    _parse_items(info, toks, items_start, from_pos)
 
-    after_from = from_pos + 4
-    stop = find_first_top_level_keyword(
-        sql, after_from, ["WHERE"] + TAIL_KEYWORDS + SETOP_KEYWORDS
-    )
-    from_end = stop[0] if stop else len(sql)
-    info.from_end = from_end
-    _parse_from_tables(info, sql[after_from:from_end])
+    after_from = from_pos + len("FROM")
+    info.from_end = end_after(("WHERE",) + TAIL_KEYWORDS + SETOP_KEYWORDS, after_from)
+    _parse_from_tables(info, toks, toks.after(after_from), toks.after(info.from_end))
 
-    where_pos = find_top_level_keyword(sql, "WHERE", after_from)
+    where_pos = first(("WHERE",), after_from)
     if where_pos is not None:
-        wstart = where_pos + 5
-        wstop = find_first_top_level_keyword(
-            sql, wstart, TAIL_KEYWORDS + SETOP_KEYWORDS
-        )
-        wend = wstop[0] if wstop else len(sql)
-        info.where = sql[wstart:wend].strip().rstrip(";").strip()
+        wstart = where_pos + len("WHERE")
+        wend = end_after(TAIL_KEYWORDS + SETOP_KEYWORDS, wstart)
+        info.where = body(wstart, wend)
         info.where_start, info.where_end = where_pos, wend
 
-    gb_pos = find_top_level_keyword(sql, "GROUP BY", after_from)
+    gb_pos = first(("GROUP BY",), after_from)
     if gb_pos is not None:
-        gstart = gb_pos + len("GROUP")
-        gstart = find_top_level_keyword(sql, "BY", gstart) + 2  # type: ignore[operator]
-        gstop = find_first_top_level_keyword(
-            sql, gstart, ["HAVING", "QUALIFY", "WINDOW", "ORDER BY", "LIMIT", "OFFSET"]
-            + SETOP_KEYWORDS,
-        )
-        gend = gstop[0] if gstop else len(sql)
-        info.group_by = sql[gstart:gend].strip().rstrip(";").strip()
+        gstart = after_by(gb_pos)
+        gend = end_after(TAIL_KEYWORDS[1:] + SETOP_KEYWORDS, gstart)
+        info.group_by = body(gstart, gend)
         info.group_by_start, info.group_by_end = gb_pos, gend
 
-    hv_pos = find_top_level_keyword(sql, "HAVING", after_from)
+    hv_pos = first(("HAVING",), after_from)
     if hv_pos is not None:
-        hstart = hv_pos + 6
-        hstop = find_first_top_level_keyword(
-            sql, hstart, ["QUALIFY", "WINDOW", "ORDER BY", "LIMIT", "OFFSET"] + SETOP_KEYWORDS
-        )
-        hend = hstop[0] if hstop else len(sql)
-        info.having = sql[hstart:hend].strip().rstrip(";").strip()
+        hstart = hv_pos + len("HAVING")
+        info.having = body(hstart, end_after(TAIL_KEYWORDS[2:] + SETOP_KEYWORDS, hstart))
 
-    ob_pos = find_top_level_keyword(sql, "ORDER BY", after_from)
+    ob_pos = first(("ORDER BY",), after_from)
     if ob_pos is not None:
-        ostart = find_top_level_keyword(sql, "BY", ob_pos) + 2  # type: ignore[operator]
-        ostop = find_first_top_level_keyword(sql, ostart, ["LIMIT", "OFFSET"] + SETOP_KEYWORDS)
-        oend = ostop[0] if ostop else len(sql)
-        info.order_by = sql[ostart:oend].strip().rstrip(";").strip()
+        ostart = after_by(ob_pos)
+        info.order_by = body(ostart, end_after(("LIMIT", "OFFSET") + SETOP_KEYWORDS, ostart))
 
-    tail = find_first_top_level_keyword(sql, after_from, TAIL_KEYWORDS)
-    info.tail_start = tail[0] if tail else None
+    info.tail_start = first(TAIL_KEYWORDS, after_from)
     return info
 
 
-def _parse_items(
-    info: SelectInfo, sql: str, start: int, end: int, extra_aggs: set[str] | None
-) -> None:
-    seg = sql[start:end]
-    offset = start
-    last = 0
-    ranges: list[tuple[int, int]] = []
-    from .sqlutil import iter_code
-
-    for i, c, depth in iter_code(seg):
-        if depth == 0 and c == ",":
-            ranges.append((last, i))
-            last = i + 1
-    ranges.append((last, len(seg)))
-    for s, e in ranges:
-        text = seg[s:e]
-        if not text.strip():
-            continue
-        expr, alias = split_expr_alias(text.strip())
+def _parse_items(info: SelectInfo, toks: Tokens, start: int, end: int) -> None:
+    sql = toks.sql
+    lo, hi = toks.after(start), toks.after(end)
+    cuts = [i for i in range(lo, hi)
+            if toks[i].depth == 0 and toks.is_punct(i, ",")]
+    bounds = zip([lo - 1] + cuts, cuts + [hi])
+    for a, b in bounds:
+        s = toks[a].end if a >= lo else start
+        e = toks[b].start if b < hi else end
+        text = sql[s:e]
+        if a + 1 == b:
+            continue  # empty item
+        as_pos = next((toks[i].start for i in range(a + 1, b)
+                       if toks[i].depth == 0 and toks.is_word(i, "AS")), None)
+        if as_pos is not None:
+            expr = sql[toks[a + 1].start:as_pos].rstrip()
+            alias = sql[as_pos + 2:toks[b - 1].end].strip()
+        else:
+            expr, alias = _split_implicit_alias(text.strip())
+        stripped = expr.strip()
+        expr_hi = toks.after(toks[a + 1].start + len(stripped))
         item = SelectItem(
-            start=offset + s,
-            end=offset + e,
+            start=s,
+            end=e,
             text=text,
-            expr=expr.strip(),
+            expr=stripped,
             alias=unquote_ident(alias) if alias else None,
         )
-        stripped = expr.strip()
         item.is_star = stripped == "*" or stripped.endswith(".*")
         item.is_literal = is_literal_constant(stripped)
-        item.has_aggregate_call = bool(_AGG_RE.search(stripped))
+        item.has_aggregate_call = toks.find_call("AGGREGATE", a + 1, expr_hi) is not None
         item.is_aggregate = (
-            contains_aggregate_fn(stripped, extra_aggs) or has_window_over(stripped)
+            _calls_aggregate(toks, a + 1, expr_hi)
+            or _window_over(toks, a + 1, expr_hi)
         ) and not item.has_aggregate_call
         info.items.append(item)
 
 
-_JOIN_RE = re.compile(
-    r"\b(LEFT|RIGHT|FULL|INNER|CROSS|OUTER|SEMI|ANTI|NATURAL)?\s*"
-    r"(LEFT|RIGHT|FULL|INNER|CROSS|OUTER|SEMI|ANTI)?\s*JOIN\b",
-    re.IGNORECASE,
-)
+def _parse_from_tables(info: SelectInfo, toks: Tokens, lo: int, hi: int) -> None:
+    """Table refs of the FROM clause in toks[lo:hi]: paren-depth-0 commas
+    and JOINs separate them.  Subqueries get name '' with their alias."""
+    seg = lo
+    for i in range(lo, hi + 1):
+        if i == hi or (toks[i].depth == 0 and (
+                toks.is_punct(i, ",") or toks.is_word(i, "JOIN"))):
+            _parse_table_ref(info, toks, seg, i)
+            seg = i + 1
 
 
-def _parse_from_tables(info: SelectInfo, from_clause: str) -> None:
-    """Extract table refs from a FROM clause: comma list + JOINs.
-    Subqueries get name '' with their alias."""
-    # split on top-level commas first
-    for part in split_top_level(from_clause):
-        _parse_join_chain(info, part)
-
-
-def _parse_join_chain(info: SelectInfo, text: str) -> None:
-    # find JOIN keywords at top level; segments between them are table refs
-    bounds: list[int] = [0]
-    from .sqlutil import iter_code
-
-    upper = text.upper()
-    positions: list[tuple[int, int]] = []  # (join_kw_start, table_start)
-    for i, c, depth in iter_code(text):
-        if depth == 0 and upper.startswith("JOIN", i) and is_word_boundary(text, i, i + 4):
-            positions.append((i, i + 4))
-    segs: list[str] = []
-    prev = 0
-    for kw_start, after in positions:
-        segs.append(text[prev:kw_start])
-        prev = after
-    segs.append(text[prev:])
-    for seg in segs:
-        # strip join-type prefixes and ON/USING suffixes
-        s = seg.strip()
-        s = re.sub(
-            r"^(LEFT|RIGHT|FULL|INNER|CROSS|OUTER|SEMI|ANTI|NATURAL|\s)+(?=\S)",
-            "",
-            s,
-            flags=re.IGNORECASE,
-        )
-        on_pos = find_top_level_keyword(s, "ON", 0)
-        using_pos = find_top_level_keyword(s, "USING", 0)
-        cut = min(x for x in [on_pos, using_pos, len(s)] if x is not None)
-        s = s[:cut].strip()
-        if not s:
-            continue
-        if s.startswith("("):
-            close = find_matching_paren(s, 0)
-            rest = s[close + 1 :].strip() if close is not None else ""
-            alias = _parse_alias(rest)
-            info.tables.append(TableRef(name="", alias=alias))
-            continue
-        m = re.match(r'^((?:[A-Za-z_][\w$]*|"[^"]+")(?:\.(?:[A-Za-z_][\w$]*|"[^"]+"))*)',
-                     s)
-        if not m:
-            continue
-        qname = m.group(1)
-        parts = qname.split(".")
-        name = unquote_ident(parts[-1])
-        qualifier = unquote_ident(parts[-2]) if len(parts) > 1 else None
-        rest = s[m.end():].strip()
-        alias = _parse_alias(rest)
-        info.tables.append(TableRef(name=name, alias=alias, qualifier=qualifier))
+def _parse_table_ref(info: SelectInfo, toks: Tokens, lo: int, hi: int) -> None:
+    sql = toks.sql
+    while lo < hi and toks.is_word(lo, *_JOIN_TYPE_WORDS):
+        lo += 1
+    cut = next((i for i in range(lo, hi)
+                if toks[i].depth == 0 and toks.is_word(i, "ON", "USING")), hi)
+    if lo >= cut:
+        return
+    end = toks[cut - 1].end
+    if toks.is_punct(lo, "("):
+        close = toks[lo].match
+        rest = sql[toks[close].end:end].strip() if 0 <= close < cut else ""
+        info.tables.append(TableRef(name="", alias=_parse_alias(rest)))
+        return
+    s = sql[toks[lo].start:end]
+    m = _TABLE_NAME_RE.match(s)
+    if not m:
+        return
+    parts = m.group(1).split(".")
+    name = unquote_ident(parts[-1])
+    qualifier = unquote_ident(parts[-2]) if len(parts) > 1 else None
+    alias = _parse_alias(s[m.end():].strip())
+    info.tables.append(TableRef(name=name, alias=alias, qualifier=qualifier))
 
 
 def _parse_alias(rest: str) -> str | None:
@@ -432,8 +395,6 @@ def resolve_group_by_cols(info: SelectInfo) -> list[str]:
         it.alias.lower(): it.expr for it in info.items if it.alias
     }
     out: list[str] = []
-    from .sqlutil import strip_comments
-
     for raw in split_top_level(content):
         col = strip_comments(raw.strip())
         if not col:
@@ -445,7 +406,8 @@ def resolve_group_by_cols(info: SelectInfo) -> list[str]:
             continue
         # a QUALIFIED ref is a real table column, never a select alias
         # (alias-collision rule, measures.test:1196-1232)
-        is_qualified = "." in re.sub(r"'[^']*'|\"[^\"]*\"", "", col)
+        is_qualified = any(t.kind is PUNCT and t.upper == "."
+                           for t in tokenize(col))
         resolved = None if is_qualified else alias_map.get(normalize_dim_key(col))
         if resolved is not None and normalize_dim_key(resolved) != normalize_dim_key(col):
             out.append(resolved)

@@ -20,7 +20,7 @@ from .catalog import MeasureCatalog
 from .ddl import parse_drop_view, process_create_view
 from .expand import QueryExpander
 from .functions.compat import normalize_statement_to_spark
-from .sqlutil import YardstickError, skip_code_unit
+from .sqlutil import PUNCT, YardstickError, tokenize
 
 
 import re as _re
@@ -47,24 +47,9 @@ _CREATE_VIEW_AS_RE = _re.compile(
 def split_statements(sql: str) -> list[str]:
     """Split a batch on top-level semicolons, respecting strings/comments/
     dollar-quotes (reference: src/yardstick_extension.cpp:358-454)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    last = 0
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
-            continue
-        if sql[i] == ";":
-            stmt = sql[last:i].strip()
-            if stmt:
-                out.append(stmt)
-            last = i + 1
-        i += 1
-    stmt = sql[last:].strip()
-    if stmt:
-        out.append(stmt)
-    return out
+    cuts = [t.start for t in tokenize(sql) if t.kind is PUNCT and t.upper == ";"]
+    bounds = zip([-1] + cuts, cuts + [len(sql)])
+    return [stmt for a, b in bounds if (stmt := sql[a + 1:b].strip())]
 
 
 @dataclass

@@ -15,14 +15,7 @@ from __future__ import annotations
 import re
 
 from .modifiers import All, AllGlobal, Modifier, Set, Visible, Where
-from .sqlutil import (
-    find_matching_paren,
-    iter_identifiers,
-    next_nonspace,
-    normalize_dim_key,
-    prev_nonspace,
-    skip_code_unit,
-)
+from .sqlutil import WORD, Tokens, normalize_dim_key, prev_nonspace, tokenize
 from .expand import parse_simple_measure_ref
 
 _WARNING_KEYWORDS = {
@@ -39,22 +32,15 @@ _DATE_PARTS = {
 _TYPED_LITERALS = {"date", "time", "timestamp", "timestamptz", "interval"}
 
 
-def _subquery_spans(sql: str) -> list[tuple[int, int]]:
+def _subquery_spans(toks: Tokens) -> list[tuple[int, int]]:
     spans = []
-    i, n = 0, len(sql)
-    while i < n:
-        j = skip_code_unit(sql, i)
-        if j > i:
-            i = j
-            continue
-        if sql[i] == "(":
-            k = next_nonspace(sql, i + 1)
-            if sql.upper().startswith("SELECT", k):
-                close = find_matching_paren(sql, i)
-                if close is not None:
-                    spans.append((i, close + 1))
-                    i = close + 1
-                    continue
+    i = 0
+    while i < len(toks):
+        j = toks.code(i + 1)
+        if (toks.is_punct(i, "(") and toks[i].match > i and j < len(toks)
+                and toks[j].upper.startswith("SELECT")):
+            spans.append((toks[i].start, toks[toks[i].match].end))
+            i = toks[i].match
         i += 1
     return spans
 
@@ -63,43 +49,41 @@ def extract_where_filter_identifiers(where: str) -> list[tuple[str | None, str]]
     """(qualifier, name) pairs for column references in a WHERE clause,
     skipping function names, keywords, cast targets, typed-literal
     keywords, EXTRACT date parts, INTERVAL units, and subqueries."""
-    spans = _subquery_spans(where)
+    toks = tokenize(where)
+    spans = _subquery_spans(toks)
     out: list[tuple[str | None, str]] = []
-    idents = list(iter_identifiers(where))
+    words = [i for i, t in enumerate(toks) if t.kind is WORD]
     consumed: set[int] = set()
-    for idx, (start, end, text) in enumerate(idents):
+
+    def next_char(i: int) -> str:  # first char of the next code token
+        k = toks.code(i + 1)
+        return where[toks[k].start] if k < len(toks) else ""
+
+    for idx, i in enumerate(words):
         if idx in consumed:
             continue
-        if any(s <= start < e for s, e in spans):
+        t = toks[i]
+        if any(s <= t.start < e for s, e in spans):
             continue
-        low = text.lower()
-        k = next_nonspace(where, end)
-        nxt = where[k] if k < len(where) else ""
-        p = prev_nonspace(where, start)
+        low = t.upper.lower()
+        nxt = next_char(i)
+        p = prev_nonspace(where, t.start)
         prev_ch = where[p] if p >= 0 else ""
         # qualified chains: qualifier(.part)*.name
         if nxt == "." or prev_ch == ".":
             # collect the full chain starting from the first component
             if prev_ch == ".":
                 continue  # handled from the chain head
-            chain = [text]
+            chain = [low]
             j = idx
-            last_end = end
-            while True:
-                kk = next_nonspace(where, last_end)
-                if kk < len(where) and where[kk] == ".":
-                    if j + 1 < len(idents) and idents[j + 1][0] > kk:
-                        j += 1
-                        chain.append(idents[j][2])
-                        consumed.add(j)
-                        last_end = idents[j][1]
-                        continue
-                break
-            after = next_nonspace(where, last_end)
-            if len(chain) >= 2 and not (after < len(where) and where[after] == "("):
-                name = chain[-1].lower()
+            while next_char(words[j]) == "." and j + 1 < len(words):
+                j += 1
+                chain.append(toks[words[j]].upper.lower())
+                consumed.add(j)
+            if len(chain) >= 2 and next_char(words[j]) != "(":
+                name = chain[-1]
                 if name not in _WARNING_KEYWORDS:
-                    out.append((".".join(chain[:-1]).lower(), name))
+                    out.append((".".join(chain[:-1]), name))
             continue
         if nxt == "(":
             continue  # function call
@@ -109,7 +93,8 @@ def extract_where_filter_identifiers(where: str) -> list[tuple[str | None, str]]
             continue
         if low in _DATE_PARTS:
             # EXTRACT(YEAR FROM x) — date part followed by FROM
-            if where.upper().startswith("FROM", k):
+            k = toks.code(i + 1)
+            if k < len(toks) and toks[k].upper.startswith("FROM"):
                 continue
             # INTERVAL '1' YEAR — date part after a string literal
             if prev_ch == "'":
@@ -117,7 +102,7 @@ def extract_where_filter_identifiers(where: str) -> list[tuple[str | None, str]]
         if prev_ch == ":" or (p >= 1 and where[p - 1 : p + 1] == "::"):
             continue  # cast target
         # CAST(x AS INT): skip token right after AS
-        if idx > 0 and idents[idx - 1][2].upper() == "AS":
+        if idx > 0 and toks[words[idx - 1]].upper == "AS":
             continue
         out.append((None, low))
     # dedupe preserving order
