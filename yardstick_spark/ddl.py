@@ -116,15 +116,14 @@ def expand_derived_measure_expr(
         k = toks.code(i + 1)
         if toks.is_punct(k, "(") or toks.is_punct(k, "."):
             continue
-        start, end = t.start, t.end
         if extract_aggregation_function(m.expression) is None and find_aggregation_in_expression(m.expression) is None:
             continue
         inner = expand_derived_measure_expr(
             m.expression, view, _exclude | {low}
         )
-        pieces.append(expr[last:start])
+        pieces.append(expr[last:t.start])
         pieces.append(f"({inner})")
-        last = end
+        last = t.end
     pieces.append(expr[last:])
     return "".join(pieces)
 

@@ -85,9 +85,6 @@ class Token:
         self.kind, self.start, self.end = kind, start, end
         self.depth, self.upper, self.match = depth, upper, match
 
-    def __repr__(self) -> str:
-        return f"Token({self.kind}, {self.start}, {self.end}, {self.upper!r})"
-
 
 class Tokens(list):
     """The token list of one statement (`tokenize`)."""
