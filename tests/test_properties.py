@@ -279,16 +279,14 @@ def test_p9_inline_path_equals_join_path(spark):
             key=repr,
         )
 
-    orig = QueryExpander._inline_target
     for name, sql in entry._MEASURE_QUERIES.items():
         if not name.startswith("m_"):
             continue
         fast = rows_of(ys.sql(sql))
-        try:
-            QueryExpander._inline_target = lambda self, info: None
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(QueryExpander, "_inline_target",
+                      lambda self, info: None)
             slow = rows_of(ys.sql(sql))
-        finally:
-            QueryExpander._inline_target = orig
         assert fast == slow, f"{name}: inline path diverges from join path"
 
 
@@ -368,12 +366,9 @@ def test_p11_fast_paths_equal_join_path_fuzz(pys, rows, dims,
         )
 
     fast = rows_of(pys.sql(sql))
-    orig = QueryExpander._inline_target
-    try:
-        QueryExpander._inline_target = lambda self, info: None
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(QueryExpander, "_inline_target", lambda self, info: None)
         slow = rows_of(pys.sql(sql))
-    finally:
-        QueryExpander._inline_target = orig
     assert fast == slow, sql
 
 

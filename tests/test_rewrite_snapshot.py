@@ -28,6 +28,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
@@ -51,12 +53,9 @@ def _rewrite(ys, sql: str) -> dict:
 def _join_path(ys, sql: str) -> dict:
     from yardstick_spark.expand import QueryExpander
 
-    orig = QueryExpander._inline_target
-    QueryExpander._inline_target = lambda self, info: None
-    try:
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(QueryExpander, "_inline_target", lambda self, info: None)
         return _rewrite(ys, sql)
-    finally:
-        QueryExpander._inline_target = orig
 
 
 def _ddl(ys, sql: str) -> dict:

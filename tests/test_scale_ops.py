@@ -418,13 +418,14 @@ def test_simhash_bucket_cap_wiring(spark):
     assert simhash_pairs(boiler, max_bucket_size=10).count() == 0
 
 
-def test_verify_arrow_matches_join_verifier(spark):
+def test_verify_arrow_matches_join_verifier(spark, monkeypatch):
     """The gated numpy-popcount verifier and the join-based verifier
     must produce identical pair sets AND identical rounded similarity
     values (same IEEE ratio, same shortest-repr HALF_UP rounding) for
     both metrics.  The corpus is hot-vocab (tiny shingle universe) so
     the Arrow gate fires on the default path; the join path is forced
-    by monkeypatching the gate off."""
+    by monkeypatching the gate off.  The direct enumeration is patched
+    off throughout so the verifier, not `_allpairs_arrow`, runs."""
     from yardstick_spark.llm import (clear_dedup_caches,
                                      ngram_containment_pairs,
                                      ngram_jaccard_pairs)
@@ -440,26 +441,24 @@ def test_verify_arrow_matches_join_verifier(spark):
         clear_dedup_caches()
         return out
 
+    monkeypatch.setattr(D, "_allpairs_arrow", lambda *a, **k: None)
     fast_c = run(ngram_containment_pairs, "containment")
     fast_j = run(ngram_jaccard_pairs, "jaccard")
-    real = D._verify_pairs_arrow
-    D._verify_pairs_arrow = lambda *a, **k: None
-    try:
-        slow_c = run(ngram_containment_pairs, "containment")
-        slow_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._verify_pairs_arrow = real
+    monkeypatch.setattr(D, "_verify_pairs_arrow", lambda *a, **k: None)
+    slow_c = run(ngram_containment_pairs, "containment")
+    slow_j = run(ngram_jaccard_pairs, "jaccard")
     assert fast_c == slow_c and len(fast_c) > 0
     assert fast_j == slow_j and len(fast_j) > 0
 
 
-def test_slim_candidates_match_position_filter_path(spark):
+def test_slim_candidates_match_position_filter_path(spark, monkeypatch):
     """The slim candidate path (no ppjoin position bookkeeping, used
     in the Arrow-verify regime) must produce identical final pairs to
     the full position-filter + join-verifier path: verification is
     exact, so the candidate superset may differ but the output cannot.
     The big-vocab path is forced by monkeypatching `_arrow_gate` off,
-    which disables BOTH the slim candidates and the Arrow verifier."""
+    which disables BOTH the slim candidates and the Arrow verifier; the
+    direct enumeration is patched off throughout."""
     from yardstick_spark.llm import (clear_dedup_caches,
                                      ngram_containment_pairs,
                                      ngram_jaccard_pairs)
@@ -475,15 +474,12 @@ def test_slim_candidates_match_position_filter_path(spark):
         clear_dedup_caches()
         return out
 
+    monkeypatch.setattr(D, "_allpairs_arrow", lambda *a, **k: None)
     slim_c = run(ngram_containment_pairs, "containment")
     slim_j = run(ngram_jaccard_pairs, "jaccard")
-    real = D._arrow_gate
-    D._arrow_gate = lambda *a, **k: False
-    try:
-        full_c = run(ngram_containment_pairs, "containment")
-        full_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._arrow_gate = real
+    monkeypatch.setattr(D, "_arrow_gate", lambda *a, **k: False)
+    full_c = run(ngram_containment_pairs, "containment")
+    full_j = run(ngram_jaccard_pairs, "jaccard")
     assert slim_c == full_c and len(slim_c) > 0
     assert slim_j == full_j and len(slim_j) > 0
 
@@ -553,13 +549,12 @@ def test_ivf_seeded_udf_path_matches_literal(spark, monkeypatch):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.limit(5)
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 10**9)
-    lit = sorted(
+    udf = sorted(
         map(tuple, ivf.ivf_knn_seeded(emb, q, k=5, n_lists=8, n_probe=3)
             .select("query_id", "neighbor_id", "sim", "rank").collect())
     )
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 0)
-    udf = sorted(
+    monkeypatch.setattr(ivf, "_udf_centroids", lambda *a: None)
+    lit = sorted(
         map(tuple, ivf.ivf_knn_seeded(emb, q, k=5, n_lists=8, n_probe=3)
             .select("query_id", "neighbor_id", "sim", "rank").collect())
     )
@@ -952,7 +947,7 @@ def test_skew_report_values_and_null_handling(spark):
     assert rep["c1"][2] == 1
 
 
-def test_folded_knn_matches_join_path(spark):
+def test_folded_knn_matches_join_path(spark, monkeypatch):
     # the folded single-scan kNN (queries/centroids/signs in the Arrow
     # closure, per-partition top-k) must be BIT-IDENTICAL to the
     # join-based reference path for every variant — same md5-parity
@@ -985,14 +980,10 @@ def test_folded_knn_matches_join_path(spark):
     # the work-adaptive fan-out (big query sets against a few-split
     # scan) must not change results either: force it by shrinking the
     # per-task cell floor to one cell
-    from yardstick_spark.llm import similarity as S
+    from yardstick_spark.llm import sizing
 
-    saved = S._FOLD_CELLS_PER_PART
-    S._FOLD_CELLS_PER_PART = 1
-    try:
-        fanned = sorted(map(tuple, brute_force_knn(emb, q, k=10).collect()))
-    finally:
-        S._FOLD_CELLS_PER_PART = saved
+    monkeypatch.setattr(sizing, "_FOLD_CELLS_PER_PART", 1)
+    fanned = sorted(map(tuple, brute_force_knn(emb, q, k=10).collect()))
     assert fanned == ref, "forced fold fan-out changed brute_force_knn"
 
 
@@ -1002,24 +993,29 @@ def test_fold_fan_out_has_per_task_floor(spark):
     serialized Python-runner handshake — the r11 emb_margin_pairs
     regression: 32 tasks for a 2M-cell fold ran 2.3x slower than 8),
     and must fan out when the work genuinely exceeds it."""
-    from yardstick_spark.llm import similarity as S
+    import pyarrow.parquet as pq
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    from yardstick_spark.llm import similarity as S
+    from yardstick_spark.llm import sizing
+
+    path = "/root/testdata/sf0.001/embeddings.parquet"
+    emb = spark.read.parquet(path)
     corpus = emb.selectExpr("vec_id AS __nid", "embedding AS __cv") \
         .filter("__nid IS NOT NULL")
-    rows = 500  # sf0.001 embeddings row count (parquet footer)
-    floor = S._FOLD_CELLS_PER_PART
+    rows = pq.ParquetFile(path).metadata.num_rows
+    floor = sizing._FOLD_CELLS_PER_PART
+    cores = spark.sparkContext.defaultParallelism
     # work below one floor unit -> unchanged partitioning
     small = S._fan_out_for_queries(corpus, max(floor // rows - 1, 1))
     assert small.rdd.getNumPartitions() == corpus.rdd.getNumPartitions()
     # work worth ~4 floor units -> fans to 1 + work // floor tasks,
     # NOT to the core count (the per-task floor IS the target)
     nq = 4 * floor // rows
+    assert 1 + rows * nq // floor >= 4
     mid = S._fan_out_for_queries(corpus, nq)
-    assert mid.rdd.getNumPartitions() == 1 + rows * nq // floor >= 4
+    assert mid.rdd.getNumPartitions() == min(cores, 1 + rows * nq // floor)
     # huge work saturates at defaultParallelism
     big = S._fan_out_for_queries(corpus, 10_000_000)
-    cores = spark.sparkContext.defaultParallelism
     assert big.rdd.getNumPartitions() == cores
 
 
@@ -1069,7 +1065,7 @@ def test_folded_knn_null_ids_match_join(spark):
     assert all(r[1] is not None for r in fold)
 
 
-def test_dsir_arrow_matches_jvm_chain(spark):
+def test_dsir_arrow_matches_jvm_chain(spark, monkeypatch):
     """The Arrow gram-hash stages (fit partials + per-doc bucket
     counts) must reproduce the JVM md5 expression chain exactly —
     weights, n_grams, AND the raw count table including c_target
@@ -1100,14 +1096,10 @@ def test_dsir_arrow_matches_jvm_chain(spark):
         return w, c
 
     for hi in ("md5", "xxhash64"):
-        orig = T._DSIR_ARROW
-        try:
-            T._DSIR_ARROW = True
-            fast = run(hi)
-            T._DSIR_ARROW = False
+        fast = run(hi)
+        with monkeypatch.context() as m:
+            m.setattr(T, "_dsir_arrow", lambda hash_impl: None)
             slow = run(hi)
-        finally:
-            T._DSIR_ARROW = orig
         assert fast == slow, hi
         # NULL-target docs leave their buckets' c_target NULL, not 0
         assert any(r[2] is None for r in fast[1]), hi
@@ -1155,7 +1147,7 @@ def test_xxh64_vectorized_matches_reference():
             xxh64(t, int(s)) for t, s in zip(tails, h1)]
 
 
-def test_allpairs_matches_prefix_join_path(spark):
+def test_allpairs_matches_prefix_join_path(spark, monkeypatch):
     """The direct rep-pair enumeration (hot-vocab `_allpairs_arrow`)
     must produce identical pairs AND values to the prefix-join +
     Arrow-verify path for both metrics, including the equal-size
@@ -1180,12 +1172,10 @@ def test_allpairs_matches_prefix_join_path(spark):
 
     fast_c = run(ngram_containment_pairs, "containment")
     fast_j = run(ngram_jaccard_pairs, "jaccard")
-    D._ALLPAIRS_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "_allpairs_arrow", lambda *a, **k: None)
         slow_c = run(ngram_containment_pairs, "containment")
         slow_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._ALLPAIRS_ARROW = True
     assert fast_c == slow_c and len(fast_c) > 0
     assert fast_j == slow_j and len(fast_j) > 0
     # the direct path really engaged: pair generation is driven by a
@@ -1196,7 +1186,7 @@ def test_allpairs_matches_prefix_join_path(spark):
     assert "Range (0" in plan
 
 
-def test_minhash_allpairs_matches_banded_join(spark):
+def test_minhash_allpairs_matches_banded_join(spark, monkeypatch):
     """The direct signature-pair enumeration must replay the banded
     LSH join exactly: band collision (slice equality), est rounding,
     the rounded >= threshold filter, and `a.id < b.id` orientation
@@ -1222,11 +1212,9 @@ def test_minhash_allpairs_matches_banded_join(spark):
 
     for th in (0.0, 0.5, 0.9):
         fast = run(th)
-        D._ALLPAIRS_ARROW = False
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(D, "_minhash_allpairs", lambda *a, **k: None)
             slow = run(th)
-        finally:
-            D._ALLPAIRS_ARROW = True
         assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # a bucket-size cap must route back to the join path (dropped
     # buckets are a property of real buckets)
@@ -1237,7 +1225,7 @@ def test_minhash_allpairs_matches_banded_join(spark):
     assert "Range (0" not in plan
 
 
-def test_fuzzy_collapse_matches_record_grain(spark):
+def test_fuzzy_collapse_matches_record_grain(spark, monkeypatch):
     """The identical-string family collapse in fuzzy_dedup_pairs must
     reproduce the record-grain pair list exactly: same pairs, same
     edit values, including intra-family edit-0 pairs, the weighted
@@ -1266,11 +1254,9 @@ def test_fuzzy_collapse_matches_record_grain(spark):
     for me, mb in ((0, 10_000), (1, 10_000), (2, 10_000),
                    (1, 12), (1, 5)):  # 12/5 straddle the family sizes
         fast = run(me, mb)
-        FZ._FUZZY_COLLAPSE = False
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(FZ, "_collapsed_pairs", lambda *a, **k: None)
             slow = run(me, mb)
-        finally:
-            FZ._FUZZY_COLLAPSE = True
         assert fast == slow, (me, mb)
         assert len(fast) > 0 or mb == 5, (me, mb)
     # duplicate ids: the gate must fall back, outputs still equal
@@ -1279,13 +1265,10 @@ def test_fuzzy_collapse_matches_record_grain(spark):
     fast = sorted(tuple(r) for r in fuzzy_dedup_pairs(
         dup, "rid", "name", max_edit=1).collect())
     clear_dedup_caches()
-    FZ._FUZZY_COLLAPSE = False
-    try:
-        slow = sorted(tuple(r) for r in fuzzy_dedup_pairs(
-            dup, "rid", "name", max_edit=1).collect())
-        clear_dedup_caches()
-    finally:
-        FZ._FUZZY_COLLAPSE = True
+    monkeypatch.setattr(FZ, "_collapsed_pairs", lambda *a, **k: None)
+    slow = sorted(tuple(r) for r in fuzzy_dedup_pairs(
+        dup, "rid", "name", max_edit=1).collect())
+    clear_dedup_caches()
     assert fast == slow
 
 
@@ -1311,7 +1294,7 @@ def test_sid_bitmap_matches_hof(spark):
     assert any(any(w < 0 for w in v) for v in got.values()) or universe < 64
 
 
-def test_incremental_allpairs_matches_probe_join(spark):
+def test_incremental_allpairs_matches_probe_join(spark, monkeypatch):
     """The direct batch-matrix probe must replay the bucket-probe join
     exactly: id-grain candidate collision on BOTH sides (duplicate-id
     rows OR their collisions, output fans back out per signature row),
@@ -1343,11 +1326,9 @@ def test_incremental_allpairs_matches_probe_join(spark):
 
     for th in (0.2, 0.5, 0.9):
         fast = run(th)
-        D._ALLPAIRS_ARROW = False
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(D, "_incremental_allpairs", lambda *a, **k: None)
             slow = run(th)
-        finally:
-            D._ALLPAIRS_ARROW = True
         assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # the direct path really engaged: no banded bucket join
     plan = incremental_minhash_pairs(
@@ -1363,7 +1344,7 @@ def test_incremental_allpairs_matches_probe_join(spark):
     assert "bhash" in plan
 
 
-def test_incremental_allpairs_corpus_dup_id_window(spark):
+def test_incremental_allpairs_corpus_dup_id_window(spark, monkeypatch):
     """Surgical pin of the id-grain OR on the CORPUS side: a corpus id
     with one row that collides (but scores below threshold) and one
     row that scores above threshold (but does not collide) must emit
@@ -1391,15 +1372,12 @@ def test_incremental_allpairs_corpus_dup_id_window(spark):
         return out
 
     fast = run()
-    D._ALLPAIRS_ARROW = False
-    try:
-        slow = run()
-    finally:
-        D._ALLPAIRS_ARROW = True
+    monkeypatch.setattr(D, "_incremental_allpairs", lambda *a, **k: None)
+    slow = run()
     assert fast == slow == [(1, 10, 0.5)]
 
 
-def test_minhash_allpairs_non_divisible_bands(spark):
+def test_minhash_allpairs_non_divisible_bands(spark, monkeypatch):
     """num_hashes % bands != 0: the bucket join's slice() ignores the
     trailing positions, so the direct enumerations must trim the same
     way instead of crashing on the reshape (ADVICE r11, reproduced:
@@ -1423,11 +1401,9 @@ def test_minhash_allpairs_non_divisible_bands(spark):
         return out
 
     fast = run_lsh()
-    D._ALLPAIRS_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "_minhash_allpairs", lambda *a, **k: None)
         slow = run_lsh()
-    finally:
-        D._ALLPAIRS_ARROW = True
     assert fast == slow and len(fast) > 0
 
     new = spark.createDataFrame(rows[:5], "doc_id long, text string")
@@ -1442,11 +1418,9 @@ def test_minhash_allpairs_non_divisible_bands(spark):
         return out
 
     fast = run_inc()
-    D._ALLPAIRS_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "_incremental_allpairs", lambda *a, **k: None)
         slow = run_inc()
-    finally:
-        D._ALLPAIRS_ARROW = True
     assert fast == slow and len(fast) > 0
 
     # bands > num_hashes is degenerate (every band an empty slice, so

@@ -260,7 +260,7 @@ def test_tfidf_planted_rare_term_ranks_first(spark):
     assert top[(0, 1)] == "zyzzyva"  # df=1 dominates any common term
 
 
-def test_incremental_minhash_finds_cross_corpus_dup(spark):
+def test_incremental_minhash_finds_cross_corpus_dup(spark, monkeypatch):
     from yardstick_spark.llm import clear_dedup_caches, incremental_minhash_pairs
     from yardstick_spark.plans import explain_str
 
@@ -289,14 +289,11 @@ def test_incremental_minhash_finds_cross_corpus_dup(spark):
     # broadcasts, the corpus side must not
     from yardstick_spark.llm import dedup as D
 
-    D._ALLPAIRS_ARROW = False
-    try:
-        jpairs = incremental_minhash_pairs(new, corpus, threshold=0.5)
-        jgot = [(r["new_id"], r["corpus_id"]) for r in jpairs.collect()]
-        assert jgot == got
-        assert "BroadcastHashJoin" in explain_str(jpairs)
-    finally:
-        D._ALLPAIRS_ARROW = True
+    monkeypatch.setattr(D, "_incremental_allpairs", lambda *a, **k: None)
+    jpairs = incremental_minhash_pairs(new, corpus, threshold=0.5)
+    jgot = [(r["new_id"], r["corpus_id"]) for r in jpairs.collect()]
+    assert jgot == got
+    assert "BroadcastHashJoin" in explain_str(jpairs)
     clear_dedup_caches()
 
 
@@ -616,9 +613,9 @@ def test_semantic_dedup_boundary_probe_recovers_split_pair(spark):
 def test_assign_cells_boundary_literal_equals_arrow(spark, monkeypatch):
     """The SQL-literal and Arrow paths of assign_cells_boundary agree
     cell-for-cell (same (d2, cell) tie rule, same relative margin) —
-    the literal path is currently dormant (_LITERAL_CENTROID_LIMIT=0,
-    the Arrow-everywhere decision) but must stay correct for any
-    future re-raise of the limit.  Includes a NULL vector and an
+    the literal path is dormant (`_udf_centroids` admits every
+    n_lists >= 1, the Arrow-everywhere decision) but must stay correct
+    as the engine-portable reference.  Includes a NULL vector and an
     exact-tie (margin 0) vector."""
     from pyspark.sql import functions as F
 
@@ -633,7 +630,7 @@ def test_assign_cells_boundary_literal_equals_arrow(spark, monkeypatch):
         "id long, arr array<double>")
     arrow = {r.id: r.cells and list(r.cells) for r in
              ivf.assign_cells_boundary(vecs, cents, 3, 0.05).collect()}
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 64)
+    monkeypatch.setattr(ivf, "_udf_centroids", lambda *a: None)
     lit = {r.id: r.cells and [c for c in r.cells if c is not None]
            for r in ivf.assign_cells_boundary(vecs, cents, 3,
                                               0.05).collect()}
@@ -1235,7 +1232,7 @@ def test_dsir_weights_gramless_doc_kept_at_zero(spark):
     assert out[3]["n_grams"] == 0 and out[3]["logw"] == 0.0
 
 
-def test_dsir_hash_impl_fast_path(spark):
+def test_dsir_hash_impl_fast_path(spark, monkeypatch):
     """xxhash64 is a drop-in bucket hash: identical doc coverage and
     gram counts (hash-independent), a VALID but different bucket
     assignment (some weight differs from md5's), the same physical
@@ -1276,9 +1273,8 @@ def test_dsir_hash_impl_fast_path(spark):
     # test_dsir_arrow_matches_jvm_chain)
     from yardstick_spark.llm import text as T
 
-    orig = T._DSIR_ARROW
-    T._DSIR_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(T, "_dsir_arrow", lambda hash_impl: None)
         md5_jvm = dsir_weights(docs, "lang = 'en'", n_buckets=256)
         md5_jvm.collect()  # AQE: toString doubles up once executed —
         # execute both sides before comparing the printed skeletons
@@ -1287,8 +1283,6 @@ def test_dsir_hash_impl_fast_path(spark):
         xx_jvm.collect()
         assert shape(md5_jvm) == shape(xx_jvm), \
             "hash swap must not change the JVM plan skeleton"
-    finally:
-        T._DSIR_ARROW = orig
     # the Arrow plans (both hashes) keep the scoring contract: bucket
     # table broadcast, no gram-grain Generate/explode
     for df in (md5_df, xx_df):

@@ -18,6 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# the multimodal operators import _spread_by_bytes from here
+from .sizing import (  # noqa: F401
+    _BLOCK_ROWS, _row_blocks, _spread, _spread_by_bytes,
+)
+
 # 60-bit portable hash: int(md5_hex[:15], 16).  Both Spark (conv) and
 # DuckDB (CAST('0x..' AS BIGINT)) produce the same value.
 _H = "CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
@@ -261,131 +266,6 @@ def _shingles(text_col: str, k: int) -> str:
         f"transform(sequence(1, greatest(1, length({norm}) - {k - 1})), "
         f"i -> substring({norm}, i, {k}))"
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to full parallelism when the input has
-    fewer partitions than cores.
-
-    A small corpus arriving as one parquet file is one input split, so
-    the CPU-heavy normalize/shingle/hash chain would pin a single core
-    (measured 6.2s -> 0.6s for minhash signatures at sf0.1).  At scale
-    the scan already has >= defaultParallelism splits and this is a
-    no-op; the shuffled columns are only (id, text).
-
-    The partition-count decision is STATIC whenever the frame is
-    local-file backed: `df.rdd.getNumPartitions()` under AQE
-    materializes every query stage upstream of the frame, so probing a
-    MID-PIPELINE frame (the curation chain feeds filtered joins into
-    its stages) executed the upstream subtree once per operator at
-    plan-build time (measured ~3 s of javaToPython stages inside one
-    pipeline_curation_full build).  Files totalling < cores * 32 MB
-    cannot yield >= cores scan splits under any maxPartitionBytes >=
-    32 MB, so the repartition decision needs no job there; the result
-    is partition-layout independent either way (the package-wide
-    determinism contract), and bigger or non-file inputs keep the
-    exact probe (free on scan-only frames)."""
-    import os
-
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-        total = 0
-        for f in files:
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                total = -1
-                break
-            total += os.path.getsize(p)
-        if files and total >= 0:
-            try:
-                raw = spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes").lower().rstrip("b")
-                mult = 1
-                if raw and raw[-1] in "kmg":
-                    mult = {"k": 1 << 10, "m": 1 << 20,
-                            "g": 1 << 30}[raw[-1]]
-                    raw = raw[:-1]
-                mpb = int(raw) * mult
-            except Exception:  # noqa: BLE001
-                mpb = 128 << 20
-            est_splits = 1 + total // max(mpb, 1)
-            if est_splits < target:
-                return df.repartition(target)
-            # the scan alone yields >= cores splits (and any upstream
-            # shuffle only adds partitions) — executing the frame just
-            # to read a partition count would double real work at scale
-            return df
-    except Exception:  # noqa: BLE001
-        pass
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def _spread_by_bytes(df: DataFrame, bytes_per_part: int = 8 << 20,
-                     rows_per_part: int | None = None) -> DataFrame:
-    """Partitioning for Arrow decode chains: ~8 MB of scan input per
-    partition, capped at defaultParallelism.
-
-    Unlike the SQL-chain `_spread` (always full parallelism), every
-    mapInPandas level pays a per-task Python-runner handshake that is
-    partly serialized through the worker daemon, so a kilobyte-scale
-    corpus fanned out to 32 tasks is pure overhead (measured 1.6 s ->
-    0.45 s for a 3-level chain at 5000 rows).  The size estimate comes
-    from the scan's file metadata on the driver — no Spark job; inputs
-    that aren't local-file-backed (mid-pipeline, remote FS) fall back
-    to `_spread`'s full-parallelism behavior, so at cluster scale this
-    never down-partitions real data.
-
-    `rows_per_part` adds a ROW-count floor for operators whose cost is
-    per-row Python work rather than bytes (the pHash DCT: ~0.2 ms per
-    payload regardless of payload size — a 2 MB corpus of 5k tiny
-    images wants ~16 tasks, not 1; measured 1.58 s -> 0.59 s).  Row
-    counts come from parquet footers on the driver (pyarrow metadata,
-    no Spark job, no data read); non-parquet inputs skip the floor."""
-    import os
-
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    target = cores
-    try:
-        total = 0
-        rows = 0
-        rows_known = True
-        for f in df.inputFiles():
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                total = 0
-                break
-            total += os.path.getsize(p)
-            if rows_per_part and rows_known and p.endswith(".parquet"):
-                try:
-                    import pyarrow.parquet as pq
-
-                    rows += pq.ParquetFile(p).metadata.num_rows
-                except Exception:  # noqa: BLE001
-                    # One unreadable footer poisons the whole count: a
-                    # PARTIAL row total would silently under-partition
-                    # the per-row-cost chain the floor exists to
-                    # protect.  Disable the floor for this input.
-                    rows = 0
-                    rows_known = False
-        if total > 0:
-            target = min(cores, 1 + total // bytes_per_part)
-            if rows_per_part and rows > 0:
-                target = min(cores, max(target, 1 + rows // rows_per_part))
-    except Exception:  # noqa: BLE001
-        pass
-    if target < cores:
-        n = int(target)
-        # repartition, not coalesce: coalesce(n) MERGES scan splits and
-        # would also cap any upstream explicit repartition at n, while
-        # the row-floor case actively wants a fan-OUT of a few-split
-        # scan; the shuffled volume is tiny by construction here
-        return df.repartition(n) if rows_per_part else df.coalesce(n)
-    return _spread(df)
 
 
 def _shingled(docs: DataFrame, text_col: str, id_col: str,
@@ -751,9 +631,8 @@ def _arrow_gate(universe: int, n_reps: int) -> bool:
 # (measured at sf0.1: 8.8M candidates out of 12.4M possible pairs) —
 # when the rep count is small enough that enumerating every pair
 # directly is cheaper than exploding prefixes through a join + distinct
-# exchange, skip the join entirely.  Tests monkeypatch this off to pin
-# the two paths equal (test_allpairs_matches_prefix_join_path).
-_ALLPAIRS_ARROW = True
+# exchange, skip the join entirely (`_allpairs_arrow`; the join path
+# stays as its reference, test_allpairs_matches_prefix_join_path).
 # Work cap for direct enumeration: R*(R-1)/2 pairs x nw bitmap words of
 # vectorized AND+popcount.  2^33 word-ops spread over the cluster is a
 # few seconds at local scale; above it the prefix join's pruning (or
@@ -762,13 +641,24 @@ _ALLPAIRS_ARROW = True
 _ALLPAIRS_WORD_BUDGET = 1 << 33
 
 
-def _allpairs_r_max(universe: int) -> int:
+def _allpairs_r_max(words: int) -> int:
     """Largest admissible rep count for direct pair enumeration over a
-    `universe`-bit bitmap matrix: the R²/2·nw word budget and the
-    64 MB broadcast-matrix cap, both driver-known before any job."""
-    nw = max((universe + 63) // 64, 1)  # universe == 0 divides by 1
-    return min(int((2 * _ALLPAIRS_WORD_BUDGET / nw) ** 0.5),
-               (64 << 20) // (nw * 8))
+    matrix of `words` 64-bit words per rep (bitmap words, or minhash
+    positions): the R²/2·words word budget and the 64 MB
+    broadcast-matrix cap, both driver-known before any job."""
+    return min(int((2 * _ALLPAIRS_WORD_BUDGET / words) ** 0.5),
+               (64 << 20) // (words * 8))
+
+
+def _run_ends(ids: list):
+    """run_end[i] = smallest j > i with ids[j] != ids[i] over id-sorted
+    ids: pairs (i, j < run_end[i]) share an id, which SQL `a.id < b.id`
+    never pairs."""
+    import numpy as np
+
+    ends = [i for i in range(1, len(ids)) if ids[i] != ids[i - 1]]
+    ends.append(len(ids))
+    return np.repeat(np.array(ends, dtype=np.int64), np.diff([0] + ends))
 
 
 def _allpairs_collect(isets: DataFrame,
@@ -780,7 +670,8 @@ def _allpairs_collect(isets: DataFrame,
     builders previously paid, exactly the `_minhash_allpairs`
     single-job pattern.  The collect also fills the family-collapse
     cache, so a fallback `isets.count()` afterwards is a cache read."""
-    r_max = _allpairs_r_max(universe)
+    # universe == 0 (every doc shingles to empty) -> one word per rep
+    r_max = _allpairs_r_max(max((universe + 63) // 64, 1))
     rows = isets.select("id", "n_sh",
                         _bits_col(isets, universe)).limit(r_max + 1).collect()
     if len(rows) > r_max:
@@ -788,9 +679,30 @@ def _allpairs_collect(isets: DataFrame,
     return rows, len(rows)
 
 
+def _direct_rep_pairs(isets: DataFrame, universe: int, threshold: float,
+                      metric: str) -> tuple[DataFrame | None, int | None]:
+    """(id_a < id_b rep pairs from `_allpairs_arrow`, n_reps) for the
+    ppjoin builders; pairs is None when the direct enumeration does not
+    admit, and n_reps (None above the bitmap universe) then feeds the
+    join path's slim-candidate gate."""
+    if universe > 4096:
+        return None, None
+    rows = n_reps = None
+    if threshold > 0:
+        rows, n_reps = _allpairs_collect(isets, universe)
+    if rows is not None:
+        ap = _allpairs_arrow(isets, universe, threshold, metric, rows)
+        if ap is not None:
+            return ap.select(F.least("id_a", "id_b").alias("id_a"),
+                             F.greatest("id_a", "id_b").alias("id_b"),
+                             metric), n_reps
+    if n_reps is None:
+        n_reps = isets.count()  # cache read after the collect
+    return None, n_reps
+
+
 def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
-                    metric: str, n_reps: int | None,
-                    rows: list | None = None) -> DataFrame | None:
+                    metric: str, rows: list) -> DataFrame | None:
     """Direct rep-pair enumeration + popcount scoring for hot-vocab
     corpora — returns rep-level (id_a, id_b, <metric>) pairs, or None
     when the gate does not admit (caller builds the prefix join).
@@ -815,18 +727,9 @@ def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
     are dropped by any threshold > 0 (the gate requires it), so the
     enumerated superset of the prefix-join candidates changes nothing.
     """
-    if universe > 4096 or threshold <= 0 or not _ALLPAIRS_ARROW:
+    if universe > 4096 or threshold <= 0:
         return None
     nw = (universe + 63) // 64
-    if rows is None:
-        if n_reps is None:
-            n_reps = isets.count()
-        if not _arrow_gate(universe, n_reps):
-            return None
-        if n_reps * (n_reps - 1) // 2 * nw > _ALLPAIRS_WORD_BUDGET:
-            return None
-        rows = isets.select("id", "n_sh",
-                            _bits_col(isets, universe)).collect()
     import numpy as np
 
     # id-sorted (None first) so equal ids form adjacent runs: the
@@ -835,14 +738,7 @@ def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
     R = len(rows)
     ids = [r["id"] for r in rows]
     none_mask = np.array([i is None for i in ids], dtype=bool)
-    # run_end[i] = smallest j > i with ids[j] != ids[i] (same-id runs
-    # are adjacent after the sort)
-    run_end = np.empty(R, dtype=np.int64)
-    j = R
-    for i in range(R - 1, -1, -1):
-        if i + 1 == R or ids[i + 1] != ids[i]:
-            j = i + 1
-        run_end[i] = j
+    run_end = _run_ends(ids)
     ns = np.array([r["n_sh"] for r in rows], dtype=np.float64)
     mat = (np.asarray([r["vs"] for r in rows], dtype=np.int64)
            .view(np.uint64).reshape(R, nw)) if R else np.zeros(
@@ -850,10 +746,8 @@ def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
     spark = isets.sparkSession
     bc = spark.sparkContext.broadcast((ids, none_mask, run_end, ns, mat))
     id_type = isets.schema["id"].dataType.simpleString()
-    blk = 64  # rows per block: blk*R*nw word-ops per task unit
-    n_blocks = max(1, (R + blk - 1) // blk)
-    par = spark.sparkContext.defaultParallelism
-    blocks = spark.range(n_blocks).repartition(min(n_blocks, max(par, 1)))
+    blk = _BLOCK_ROWS  # blk*R*nw word-ops per task unit
+    blocks = _row_blocks(spark, R)
 
     def _score(batches):
         import decimal
@@ -917,7 +811,7 @@ def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
 
 def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
                         threshold: float, metric: str,
-                        n_reps: int | None = None) -> DataFrame | None:
+                        n_reps: int | None) -> DataFrame | None:
     """Vectorized candidate verification for hot-vocabulary corpora —
     returns rep-level (id_a, id_b, <metric>) pairs, or None when the
     gate does not apply (caller falls back to the join verifiers).
@@ -948,11 +842,7 @@ def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
     decimals — Spark's round() semantics
     (`test_verify_arrow_matches_join_verifier` pins both metrics'
     pair sets and values against the join verifier)."""
-    if universe > 4096:
-        return None
-    if n_reps is None:
-        n_reps = isets.count()
-    if not _arrow_gate(universe, n_reps):
+    if universe > 4096 or not _arrow_gate(universe, n_reps):
         return None
     nw = (universe + 63) // 64
     import numpy as np
@@ -1065,25 +955,11 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     # Big-vocab corpora (the 100 TB shape) keep the position filter:
     # there it prunes candidates ~20x before verification.
     # hot vocab + small rep count: enumerate rep pairs directly
-    # instead of exploding prefixes through a join + distinct — one
-    # bounded limit-collect decides the gate AND fetches the matrix
-    # (`_allpairs_collect`), replacing the count-then-collect pair
-    n_reps = rows = None
-    if universe <= 4096:
-        if _ALLPAIRS_ARROW and threshold > 0:
-            rows, n_reps = _allpairs_collect(isets, universe)
-        if n_reps is None:
-            n_reps = isets.count()  # cache read after the collect
+    rep_pairs, n_reps = _direct_rep_pairs(isets, universe, threshold,
+                                          "jaccard")
+    if rep_pairs is not None:
+        return _family_expand(rep_pairs, members, "jaccard", threshold)
     slim = n_reps is not None and _arrow_gate(universe, n_reps)
-    if rows is not None:
-        ap = _allpairs_arrow(isets, universe, threshold, "jaccard",
-                             n_reps, rows=rows)
-        if ap is not None:
-            rep_pairs = ap.select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "jaccard")
-            return _family_expand(rep_pairs, members, "jaccard",
-                                  threshold)
 
     def _prefix(frac_expr):
         plen = (F.col("n_sh") - F.ceil(frac_expr - F.lit(1e-9)) + 1).cast("int")
@@ -1234,24 +1110,13 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
     # result identical; big vocabularies retain the position filter.
     # same direct-enumeration gate as ngram_jaccard_pairs — and
     # containment is where it bites hardest (no length filter, so
-    # the prefix join yielded 8.8M of 12.4M possible pairs); one
-    # bounded limit-collect decides the gate AND fetches the matrix
-    n_reps = rows = None
-    if universe <= 4096:
-        if _ALLPAIRS_ARROW and threshold > 0:
-            rows, n_reps = _allpairs_collect(isets, universe)
-        if n_reps is None:
-            n_reps = isets.count()  # cache read after the collect
+    # the prefix join yielded 8.8M of 12.4M possible pairs)
+    rep_pairs, n_reps = _direct_rep_pairs(isets, universe, threshold,
+                                          "containment")
+    if rep_pairs is not None:
+        return _family_expand(rep_pairs, members, "containment",
+                              threshold)
     slim = n_reps is not None and _arrow_gate(universe, n_reps)
-    if rows is not None:
-        ap = _allpairs_arrow(isets, universe, threshold, "containment",
-                             n_reps, rows=rows)
-        if ap is not None:
-            rep_pairs = ap.select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "containment")
-            return _family_expand(rep_pairs, members, "containment",
-                                  threshold)
     if slim:
         prefix = isets.select(
             "id", "n_sh",
@@ -1486,7 +1351,7 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     from the matrix here.  Above the gate (or with a bucket-size cap,
     whose dropped-bucket semantics need real buckets) the join path
     runs unchanged — the 100 TB shape."""
-    if not _ALLPAIRS_ARROW or num_hashes // bands == 0:
+    if num_hashes // bands == 0:
         # bands > num_hashes is degenerate (every band is an empty
         # slice, so the bucket join collides EVERYTHING); keep the
         # join so those semantics stay in one place
@@ -1498,8 +1363,7 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     # the 64 MB matrix cap, ≤ ~8 MB of signatures) and bail when the
     # limit is hit — a second AQE job round per consumer query is
     # exactly the fixed cost this path exists to remove
-    r_max = min(int((2 * _ALLPAIRS_WORD_BUDGET / num_hashes) ** 0.5),
-                (64 << 20) // (num_hashes * 8))
+    r_max = _allpairs_r_max(num_hashes)
     import numpy as np
 
     rows = nn.select("id", "signature").limit(r_max + 1).collect()
@@ -1508,12 +1372,7 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     rows.sort(key=lambda r: r["id"])
     R = len(rows)
     ids = [r["id"] for r in rows]
-    run_end = np.empty(R, dtype=np.int64)  # smallest j > i with
-    j = R                                  # ids[j] != ids[i]
-    for i in range(R - 1, -1, -1):
-        if i + 1 == R or ids[i + 1] != ids[i]:
-            j = i + 1
-        run_end[i] = j
+    run_end = _run_ends(ids)
     sig_mat = (np.asarray([r["signature"] for r in rows],
                           dtype=np.int64).reshape(R, num_hashes)
                if R else np.zeros((0, num_hashes), dtype=np.int64))
@@ -1521,10 +1380,8 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     bc = spark.sparkContext.broadcast((ids, run_end, sig_mat))
     id_type = sigs.schema["id"].dataType.simpleString()
     band_rows = num_hashes // bands
-    blk = 64
-    n_blocks = max(1, (R + blk - 1) // blk)
-    par = spark.sparkContext.defaultParallelism
-    blocks = spark.range(n_blocks).repartition(min(n_blocks, max(par, 1)))
+    blk = _BLOCK_ROWS
+    blocks = _row_blocks(spark, R)
 
     def _score(batches):
         import decimal
@@ -1844,7 +1701,7 @@ def _incremental_allpairs(new_sigs: DataFrame, corp_sigs: DataFrame,
     belong to real buckets — the caller passes buckets_canonical=False).
     At 100 TB the corpus side stays one shuffle-free scan either way;
     the batch gate routes oversized batches back to the join."""
-    if not _ALLPAIRS_ARROW or threshold <= 0 or num_hashes // bands == 0:
+    if threshold <= 0 or num_hashes // bands == 0:
         return None
     nid_type = new_sigs.schema["id"].dataType.simpleString()
     cid_type = corp_sigs.schema["id"].dataType.simpleString()

@@ -98,19 +98,20 @@ def seed_centroids(corpus: DataFrame, id_col: str = "vec_id",
     )
 
 
-# centroid-count threshold below which assignment/probing uses the
-# SQL-literal centroid tree instead of the Arrow-UDF matmul closure.
-# Default 0: the Arrow path wins at EVERY measured size (sf0.1 ivf
-# query 1.50 s -> 1.08 s, 10x corpus 3.7 s -> 1.8 s — Spark's
-# higher-order-function lambdas evaluate interpreted per element, so
-# the literal d2 fold costs corpus x n_lists x dim interpreter steps),
-# is bit-identical to the literal path (same sequential fold; parity
-# pinned by test_ivf_seeded_udf_path_matches_literal), and above ~256
-# lists the literal tree additionally costs the driver O(n_lists*dim)
-# analysis/codegen per query.  The literal branch is kept as the
-# engine-portable spec (the DuckDB oracles transcribe it) and as the
-# no-Python-workers fallback: raise this bound to prefer it.
-_LITERAL_CENTROID_LIMIT = 0
+def _udf_centroids(cent_df: DataFrame, n_lists: int):
+    """The Arrow-UDF centroid closure's (cells, matrix), or None for
+    n_lists < 1 (the SQL-literal centroid tree then runs).
+
+    The Arrow path wins at EVERY measured size (sf0.1 ivf query 1.50 s
+    -> 1.08 s, 10x corpus 3.7 s -> 1.8 s — Spark's higher-order-function
+    lambdas evaluate interpreted per element, so the literal d2 fold
+    costs corpus x n_lists x dim interpreter steps), is bit-identical
+    to the literal path (same sequential fold; parity pinned by
+    test_ivf_seeded_udf_path_matches_literal), and above ~256 lists the
+    literal tree additionally costs the driver O(n_lists*dim)
+    analysis/codegen per query.  The literal branch is kept as the
+    engine-portable spec (the DuckDB oracles transcribe it)."""
+    return _centroid_matrix(cent_df) if n_lists >= 1 else None
 
 
 def _centroid_matrix(centroids: DataFrame):
@@ -245,7 +246,7 @@ _D2 = ("aggregate(zip_with({v}, s.c, (a, b) -> (a - b) * (a - b)), "
 
 def _centroid_literals(cent_df: DataFrame) -> str:
     """Comma-joined named_struct('cell', i, 'c', array(...)) literals
-    for the SQL-expression centroid path (≤ _LITERAL_CENTROID_LIMIT)."""
+    for the SQL-expression centroid path (see `_udf_centroids`)."""
     cents = sorted(
         (int(r["cell"]), [float(x) for x in r["centroid"]])
         for r in cent_df.collect()
@@ -261,15 +262,15 @@ def assign_cells(vectors: DataFrame, cent_df: DataFrame, n_lists: int,
                  vec_col: str = "arr") -> DataFrame:
     """`vectors` plus a `cell` column: nearest centroid by squared
     euclidean distance, ties to the lower cell id.  Scan-side with zero
-    extra shuffle either way: the SQL-literal expression up to
-    `_LITERAL_CENTROID_LIMIT` cells (engine-portable — the DuckDB
-    oracles reproduce it bit-exactly), the Arrow-UDF matmul path above
-    (closure-carried centroid matrix, O(1) driver-side plan cost).
+    extra shuffle either way: the Arrow-UDF matmul path
+    (closure-carried centroid matrix, O(1) driver-side plan cost), or
+    the SQL-literal expression it replays (engine-portable — the
+    DuckDB oracles reproduce it bit-exactly; see `_udf_centroids`).
     Shared by `ivf_knn_seeded` and `semantic_dedup_pairs`."""
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
+    cm = _udf_centroids(cent_df, n_lists)
+    if cm is not None:
         return vectors.withColumn(
-            "cell", _assign_cell_udf(cells, mat)(F.col(vec_col))
+            "cell", _assign_cell_udf(*cm)(F.col(vec_col))
         )
     cent_lits = _centroid_literals(cent_df)
     # nearest cell: lexicographic struct min over (d2, cell) — ties
@@ -297,12 +298,11 @@ def assign_cells_boundary(vectors: DataFrame, cent_df: DataFrame,
     lower cell id), the same rule as `assign_cells`; NULL/empty
     vectors yield a NULL-only array (dropped by callers' NotNull
     filter after the explode)."""
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
+    cm = _udf_centroids(cent_df, n_lists)
+    if cm is not None:
         return vectors.withColumn(
             "cells",
-            _assign_cells_boundary_udf(cells, mat, boundary_eps)(
-                F.col(vec_col)))
+            _assign_cells_boundary_udf(*cm, boundary_eps)(F.col(vec_col)))
     cent_lits = _centroid_literals(cent_df)
     srt = (f"array_sort(transform(array({cent_lits}), s -> "
            f"struct({_D2.format(v=vec_col)} AS d, s.cell AS cell)))")
@@ -411,13 +411,12 @@ def ivf_knn_seeded(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     The centroid table is bounded by n_lists, so cell assignment and
     probe selection run scan-side with zero extra shuffle (exactly how
-    a deployed IVF index ships its centroids to every executor).  Up to
-    `_LITERAL_CENTROID_LIMIT` cells the centroids are embedded as a
-    SQL literal (whole-stage codegen, engine-portable — the DuckDB
-    oracle reproduces it bit-exactly); above that, the same assignment
-    runs as an Arrow pandas_udf whose closure carries the centroid
-    matrix, so driver-side plan analysis stays O(1) in n_lists — the
-    production path for 4k-64k-list indexes.  The final top-k is a
+    a deployed IVF index ships its centroids to every executor).  The
+    assignment runs as an Arrow pandas_udf whose closure carries the
+    centroid matrix, so driver-side plan analysis stays O(1) in
+    n_lists — the production path for 4k-64k-list indexes; the
+    SQL-literal centroid tree it replays bit-exactly (the DuckDB
+    oracle's spec) stays as its reference (`_udf_centroids`).  The final top-k is a
     rank window that Spark executes with a map-side partial
     WindowGroupLimit — each scan task forwards at most k rows per
     query, so no reducer sees corpus-proportional input.
@@ -482,11 +481,10 @@ def ivf_knn_seeded(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.expr(_as_vec(vec_col)).alias("qv"),
     )
     assigned = assign_cells(corpus_sel, cent_df, n_lists, "arr")
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
+    cm = _udf_centroids(cent_df, n_lists)
+    if cm is not None:
         probes = query_sel.withColumn(
-            "cell",
-            F.explode(_probe_cells_udf(cells, mat, n_probe)(F.col("qv"))),
+            "cell", F.explode(_probe_cells_udf(*cm, n_probe)(F.col("qv"))),
         )
     else:
         cent_lits = _centroid_literals(cent_df)

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .sizing import _fan_out_for_queries
+
 
 def _cosine(a: str, b: str) -> str:
     """Cosine similarity of two array<double> columns as a SQL expr —
@@ -404,80 +406,6 @@ def _query_matrix_from_rows(id_vec_rows, keep_null_vecs):
         return [], None, None
     Q = np.array(vecs, dtype=np.float64)
     return qids, Q, _np_seq_norm(Q)
-
-
-# Per-TASK work floor for the fold fan-out, in SCORE CELLS (corpus
-# rows × query count).  Every extra mapInPandas task pays a
-# Python-runner handshake that is partly serialized through the worker
-# daemon (see dedup._spread_by_bytes), so the fan-out target is
-# work // floor — each fanned task keeps ≥ ~0.3-0.6 s of vectorized
-# score+sort work (~3-6× the handshake), instead of splitting by core
-# count.  r11 shipped a bytes-based 16 MB budget here that fanned the
-# 2M-cell emb_margin_pairs fold to 32 tasks: the driver bench measured
-# that query 2.3× SLOWER at 32 cores than at 8 (handshake-bound,
-# scaling ratio 0.27).  r12 interleaved A/Bs at sf0.1 (min/median of
-# 7 reps, same JVM): this floor (→ 9 tasks) runs 1.80/1.98 s at 32
-# cores and 2.28/3.09 s at 8, vs fan-to-all-cores 2.40/2.54 and
-# 2.05/2.54, vs no-fan-out 2.93/5.01 and 7.64/12.34 — bounded fan-out
-# wins at both core counts and restores 32-core ≤ 8-core.
-_FOLD_CELLS_PER_PART = 256 << 10
-# Bytes-based fallback when parquet row counts are unreadable: at
-# ~400 B/row for a dim-64 float-array row, 256k cells ≈ 100 MB of
-# (file bytes × queries); 64 MB keeps the fallback slightly more eager
-# than the row floor without re-creating the 32-task regime.
-_FOLD_WORK_PER_PART = 64 << 20
-
-
-def _fan_out_for_queries(df: DataFrame, nq: int) -> DataFrame:
-    """Round-robin fan-OUT of a few-split corpus scan before the fold
-    when PER-TASK score work (corpus rows × query count) would pin a
-    few cores for many seconds.  Never shrinks partitioning, and
-    inputs whose size is unknown (mid-pipeline, remote FS) are left
-    alone — at cluster scale the scan already has >=
-    defaultParallelism splits and this is a no-op, so the 100 TB plan
-    shape is unchanged.  Row counts come from parquet footers on the
-    driver (no Spark job; the `_spread_by_bytes` rows_per_part
-    precedent), so the target is exactly work // per-task-floor: a
-    fold that cannot keep every fanned task busy stays on its few
-    tasks instead of paying 32 handshakes to split a 2-second job."""
-    import os
-
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    cur = df.rdd.getNumPartitions()
-    if cur >= cores:
-        return df
-    total = 0
-    rows = 0
-    rows_known = True
-    try:
-        for f in df.inputFiles():
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                return df
-            total += os.path.getsize(p)
-            if rows_known and p.endswith(".parquet"):
-                try:
-                    import pyarrow.parquet as pq
-
-                    rows += pq.ParquetFile(p).metadata.num_rows
-                except Exception:  # noqa: BLE001
-                    rows_known = False
-            else:
-                rows_known = False
-    except Exception:  # noqa: BLE001
-        return df
-    if total <= 0:
-        return df
-    if rows_known and rows > 0:
-        target = min(cores,
-                     1 + rows * max(nq, 1) // _FOLD_CELLS_PER_PART)
-    else:
-        target = min(cores,
-                     1 + total * max(nq, 1) // _FOLD_WORK_PER_PART)
-    if target > cur:
-        return df.repartition(int(target))
-    return df
 
 
 def _knn_result_schema(corpus: DataFrame, queries: DataFrame,

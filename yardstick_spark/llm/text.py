@@ -1437,10 +1437,14 @@ def _dsir_grams(text_col: str) -> str:
 
 _DSIR_SCALE = 1_000_000  # 1e-6 quantization grid for log-ratios
 
-# The md5 gram-hash chain runs in one Arrow stage (guide §4.2) instead
-# of per-gram JVM expressions; tests monkeypatch this off to pin the
-# two paths equal (test_dsir_arrow_matches_jvm_chain).
-_DSIR_ARROW = True
+
+def _dsir_arrow(hash_impl: str) -> str | None:
+    """The hash the Arrow gram stages run (guide §4.2: one Arrow stage
+    instead of per-gram JVM expressions), or None for the JVM chain —
+    the reference both stages are pinned equal to
+    (test_dsir_arrow_matches_jvm_chain), and the path that rejects an
+    unknown `hash_impl`."""
+    return hash_impl if hash_impl in ("md5", "xxhash64") else None
 
 
 def _dsir_words_expr(text_col: str) -> str:
@@ -1734,7 +1738,7 @@ def _dsir_bucket_counts(docs: DataFrame, target_cond: str,
     refit."""
     from .dedup import _spread  # single-file inputs must not pin 1 core
 
-    if _DSIR_ARROW and hash_impl in ("md5", "xxhash64"):
+    if _dsir_arrow(hash_impl) is not None:
         # One Arrow stage replaces the per-gram hash expression chain
         # (guide §4.2): per task it accumulates the complete bucket
         # histogram (≤ n_buckets rows, the same partial grain the JVM
@@ -1868,7 +1872,7 @@ def _dsir_score(docs: DataFrame, lrs: DataFrame, n_buckets: int,
     else:
         sent = "CAST(NULL AS STRING)"
         empty = "CAST(array() AS ARRAY<STRING>)"
-    if _DSIR_ARROW and hash_impl in ("md5", "xxhash64"):
+    if _dsir_arrow(hash_impl) is not None:
         # Arrow gram hashing (see _dsir_bucket_counts): the scan side
         # emits per-doc (bucket, cnt) rows — ≤ distinct-buckets rows
         # per doc instead of one exploded JVM row per gram occurrence,
