@@ -390,7 +390,7 @@ def test_mmr_matches_duckdb_unrolled(spark):
     assert got == want
 
 
-def test_mmr_pair_bound_falls_back(spark):
+def test_mmr_pair_bound_falls_back(spark, monkeypatch):
     """_mmr_driver collects BOTH cand and pair (cand x (pool-1) rows):
     a pool large enough that the pair table would blow the driver
     collect must route to the distributed loop even when the cand
@@ -406,16 +406,47 @@ def test_mmr_pair_bound_falls_back(spark):
     q = df.filter("vec_id < 2")
     # cand = 2 queries x pool 25 = 50 <= 50 passes the old gate, but
     # pair rows = 50 * 24 = 1200 > 20 * 50 — must NOT hit the driver
-    orig = M._mmr_driver
-
     def boom(*a, **k):
         raise AssertionError("driver path must not run")
 
-    M._mmr_driver = boom
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(M, "_mmr_driver", boom)
         slow = sorted(map(tuple, mmr_rerank(
             df, q, k=4, pool=25, driver_max_pool_rows=50).collect()))
-    finally:
-        M._mmr_driver = orig
     fast = sorted(map(tuple, mmr_rerank(df, q, k=4, pool=25).collect()))
     assert fast == slow and len(fast) == 8
+
+
+def test_mmr_driver_gate_falls_back_on_duplicate_corpus_ids(spark,
+                                                            monkeypatch):
+    """Duplicate corpus ids fan the neighbor-vector join out, so the
+    pair table outgrows the gate's cand x (pool - 1) estimate: the
+    driver path's bounded pair collect must hit its limit and hand
+    over to the distributed rounds, with the distributed result."""
+    import numpy as np
+
+    from yardstick_spark.llm import mining as M
+    from yardstick_spark.llm import mmr_rerank
+
+    rng = np.random.RandomState(5)
+    corpus = spark.createDataFrame(
+        [(i % 10, [float(x) for x in rng.randn(6)]) for i in range(40)],
+        "vec_id long, embedding array<float>")  # each id 4 times
+    q = _vecs(spark, rng.randn(1, 6).astype(np.float32), id_start=100)
+    declined = []
+    real = M._mmr_driver
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        declined.append(out is None)
+        return out
+
+    # cand = 1 query x pool 5 = 5 rows passes the gate (estimate 20
+    # pairs <= 20 * 5), but the 4x id fan-out yields > 100 pair rows
+    monkeypatch.setattr(M, "_mmr_driver", spy)
+    got = sorted(map(tuple, mmr_rerank(
+        corpus, q, k=3, pool=5, driver_max_pool_rows=5).collect()))
+    assert declined == [True]
+    want = sorted(map(tuple, mmr_rerank(
+        corpus, q, k=3, pool=5, driver_max_pool_rows=0).collect()))
+    assert got == want and len(got) == 3

@@ -200,24 +200,28 @@ def embedding_outliers(vecs: DataFrame, id_col: str = "vec_id",
 
 
 def _mmr_driver(cand: DataFrame, pair: DataFrame, k: int, lam: float,
-                onemlam: float) -> DataFrame:
+                onemlam: float, max_pairs: int) -> DataFrame | None:
     """Greedy MMR rounds over gate-checked collected pool tables —
     the small-pool half of `mmr_rerank` (the pagerank/kmeans/LPA gate
-    pattern).  Replays the distributed rounds exactly: the same two
-    double literals score `lam*sim - onemlam*coalesce(pen, 0)`, the
-    same (score desc NULLS LAST, neighbor_id asc) pick, pen = MAX of
-    the non-NULL pairwise sims against the selected set.  Pinned by
+    pattern), or None when `pair` holds more than `max_pairs` rows.
+    Replays the distributed rounds exactly: the same two double
+    literals score `lam*sim - onemlam*coalesce(pen, 0)`, the same
+    (score desc NULLS LAST, neighbor_id asc) pick, pen = MAX of the
+    non-NULL pairwise sims against the selected set.  Pinned by
     `test_mmr_driver_gate_matches_distributed`."""
     from pyspark.sql.types import (DoubleType, IntegerType, StructField,
                                    StructType)
 
+    pairs = pair.limit(max_pairs + 1).collect()  # one bounded collect
+    if len(pairs) > max_pairs:
+        return None
     spark = cand.sparkSession
     by_q: dict = {}
     for r in cand.collect():
         by_q.setdefault(r["query_id"], []).append(
             (r["neighbor_id"], r["sim"]))
     ps: dict = {}
-    for r in pair.collect():
+    for r in pairs:
         if r["ps"] is not None:
             ps[(r["query_id"], r["a"], r["b"])] = r["ps"]
     out = []
@@ -316,12 +320,16 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # (pool - 1) rows — so the gate bounds the pair collect too (a
     # caller-supplied pool of 500 would otherwise push 50M rows
     # through one collect() behind a gate that reported "small").
+    # Duplicate corpus ids fan the neighbor join out past that
+    # estimate, so the pair collect itself stops at the bound.
     if driver_max_pool_rows:
         cand_n = cand.count()
-        pair_rows = cand_n * max(pool - 1, 0)
+        max_pairs = 20 * driver_max_pool_rows
         if (cand_n <= driver_max_pool_rows
-                and pair_rows <= 20 * driver_max_pool_rows):
-            return _mmr_driver(cand, pair, k, lam, onemlam)
+                and cand_n * max(pool - 1, 0) <= max_pairs):
+            out = _mmr_driver(cand, pair, k, lam, onemlam, max_pairs)
+            if out is not None:
+                return out
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id"))
     selected = (
