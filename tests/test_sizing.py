@@ -78,3 +78,27 @@ def test_footer_rows_are_memoized_per_file_version(spark, tmp_path,
     pq.write_table(pq.read_table(EMB).slice(0, 200), p)
     assert sizing._probe(spark.read.parquet(str(p)), rows=True).rows == 200
     assert len(reads) == 2
+
+
+def test_sizing_runs_no_job_on_frames_with_an_exchange(spark):
+    """Every sizing helper decides without a Spark job, also on frames
+    whose split count would need one (an aggregate below them, with
+    and without input files); such a frame is left as it is unless its
+    files alone decide."""
+    from pyspark.sql import functions as F
+
+    from yardstick_spark.llm import sizing
+
+    emb = spark.read.parquet(EMB)
+    created = spark.createDataFrame(
+        [(i % 7, [float(i)]) for i in range(50)],
+        "vec_id long, embedding array<double>")
+    for src in (emb, created):
+        agg = src.groupBy("vec_id").agg(F.first("embedding").alias("e"))
+        _, jobs = _built(spark, lambda: [
+            sizing._spread(agg),
+            sizing._spread_by_bytes(agg, rows_per_part=256),
+            sizing._fan_out_for_queries(agg, 10_000_000)])
+        assert jobs == 0
+        assert sizing._fan_out_for_queries(agg, 10_000_000) is agg
+    assert sizing._spread(agg) is agg  # no files, split count not free

@@ -1,7 +1,7 @@
 """Work sizing for the llm operators: how many tasks a stage gets.
 
-Every fan-out decision in the package is made here, and none runs a
-Spark job.  `_probe` reads a frame's local input files on the driver
+Every llm fan-out decision that depends on the input's size is made
+here, and none runs a Spark job.  `_probe` reads a frame's local input files on the driver
 (bytes, and parquet footer rows memoized per file version).
 `_split_count` reads the frame's partition count only when that is
 free: under AQE, reading it with an exchange below the frame executes
